@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.functions.tokenizer import tokenize_sql_spark, tokenize_text
+from bliss_rs_spark.operators.unit_server import _UnitServer
 
 _EMPTY_I64 = np.empty(0, np.int64)
 
@@ -707,71 +708,31 @@ def _allow_for_partition(
     return _cached_allow_ids(key)
 
 
-def _ensure_pos_unit_cache(spark, store, key: str, src_dir: str, cfg) -> str:
-    """Pack one unit's positional rows into the store's derived cache
-    (``<store>/derived/pos_units/<key>``) if not already there; returns the
-    cache path.  Keys are SEGMENT names (immutable), so a snapshot update
-    only ever packs its delta segment — the pack work across the store's
-    lifetime is O(corpus), not O(corpus x snapshots).  Written to a temp
-    dir and renamed into place, so concurrent first-servers race benignly.
-    gc() prunes caches of unreferenced segments."""
-    import os
-    import shutil
-    import uuid
-
-    from bliss_rs_spark.sources.index_store import _ensure_schema_file
-
-    cache = os.path.join(store.path, "derived", "pos_units", key)
-    if not os.path.isdir(cache):
-        rows = spark.read.parquet(src_dir).select("term", "doc_id", "positions")
-        tmp = cache + ".tmp-" + uuid.uuid4().hex[:8]
-        packed = pack_positional(rows, cfg)
-        packed.write.mode("overwrite").parquet(tmp)
-        _ensure_schema_file(packed, tmp)
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        try:
-            os.rename(tmp, cache)
-        except OSError:
-            # another server won the race; its pack is equivalent
-            shutil.rmtree(tmp, ignore_errors=True)
-    return cache
-
-
-class PhraseServer:
+class PhraseServer(_UnitServer):
     """Low-latency phrase serving: warm exact-phrase top-k in ONE
-    shuffle-free job — the positional sibling of WandServer (round-3 verdict
-    "what's missing" #4: interactive phrase queries paid the batch path's
-    n-way join + window, seconds where term queries pay ~0.4s).
+    shuffle-free job — the positional sibling of WandServer.  The unit
+    lifecycle (cached per-unit frames, refresh, dead sets, filters, gc
+    pins) is _UnitServer's, operators/unit_server.py.
 
-    Same structural move as WandServer: the positional data is hash-
-    repartitioned ONCE (by doc shard in packed mode, by doc_id in row mode)
-    and persisted, so every doc's term rows are wholly inside one partition
-    BY CONSTRUCTION (deterministic exchange — survives executor loss and
-    partition recompute).  Per query: filter(term isin phrase terms) over
-    the cached partitions -> mapInPandas runs the position-intersection
-    chain per complete doc and emits its partition's local top-k -> tiny
+    Packed mode caches one delta+varbyte positional blob per (unit, shard,
+    term), repartitioned by doc shard; ``from_store`` packs each store
+    segment once into ``derived/pos_units/<segment>`` and masks tombstoned
+    docs with the broadcast dead sets inside the kernel.  Row mode
+    (``packed=False``) caches the raw (term, doc_id, positions) rows
+    repartitioned by doc_id — the reference kernel the tests compare
+    against.  Either way every doc's term rows lie wholly inside one
+    partition, and per query: filter(term isin phrase terms) over the
+    cached partitions -> mapInPandas runs the position-intersection chain
+    per complete doc and emits its partition's local top-k -> tiny
     (partitions x k) driver merge.  No shuffle, no join, no window, one
     stage.
 
-    Round 5 adds the across-updates story, mirroring WandServer:
-
-    - the pack is PER UNIT (one unit per store segment, cached under
-      ``derived/pos_units/<segment>`` keyed by the immutable segment name),
-      so a 1%-delta segment update packs and caches only the delta —
-      never the 10^9-doc base;
-    - per-segment packs encode the segment's FULL rows; tombstones are
-      applied at query time as per-(unit, shard) dead sets broadcast-joined
-      onto the scan (same machinery as the WAND dead frame,
-      operators/wand.py:_dead_sets_df) and masked inside the kernel;
-    - ``refresh(store)`` re-points a live server at the CURRENT snapshot,
-      reusing every cached unit whose pack fingerprint is unchanged and
-      rebuilding only the delta + the churn-sized dead frame.
-
     Rank-identical to phrase_topk (same |∩ (Pi - i)| count, same
     (phrase_tf DESC, doc_id ASC) tie-break; tested, including across
-    churn).  Reference analogue: one store updated in place and re-queried
-    warm (/root/reference/src/library.rs:1040-1084).
+    churn).
     """
+
+    _unit_source = ("positional", "pos_units")
 
     def __init__(
         self,
@@ -783,69 +744,40 @@ class PhraseServer:
         units: list[tuple[int, DataFrame]] | None = None,
         tombstones: DataFrame | None = None,
     ):
-        self.spark = spark
         self.cfg = cfg or IndexConfig()
-        if target_partitions is None:
-            target_partitions = spark.sparkContext.defaultParallelism
-        self._target_partitions = max(int(target_partitions), 1)
-        self._unit_fps: dict[int, tuple] = {}  # filled by from_store/refresh
-        self._pin: str | None = None  # gc() pin file (from_store servers)
         self._store_mode = units is not None
-        self._dead_bc = None  # broadcast {(unit, shard): dead bytes}
-        self._filters: dict[str, object] = {}  # name -> broadcast id array
-        self._unit_frames: dict[int, DataFrame] = {}
         self._has_stats = True
-
         if units is None:
             if positional is None:
                 raise ValueError("PhraseServer needs positional rows or units")
             if "pblob" in positional.columns:
                 packed = True
-                pk = positional
             elif packed:
                 # pack at init (one job): per-query Arrow transfer becomes
                 # one blob per (shard, term) instead of one row per
                 # (term, doc) — the term that dominated hot-phrase latency
-                pk = pack_positional(positional, self.cfg)
-            self.packed = bool(packed)
-            if not self.packed:
-                # row mode: repartition by doc_id -> docs complete per
-                # partition; sortWithinPartitions clusters each term's rows
-                # so the columnar cache's min/max stats prune the per-query
-                # term filter to a handful of batches
-                self.pos = (
-                    positional.select("term", "doc_id", "positions")
-                    .repartition(self._target_partitions, "doc_id")
-                    .sortWithinPartitions("term")
-                    .persist()
-                )
-                self.pos.count()  # warm the cache outside any query
-                return
-            units = [(0, pk)]
+                positional = pack_positional(positional, self.cfg)
+            units = [(0, positional)]
         else:
-            self.packed = True
+            packed = True
+        self.packed = bool(packed)
+        self._init_units(
+            spark, units, target_partitions, self.cfg.n_doc_shards, tombstones
+        )
 
-        for i, (seq, p) in enumerate(units):
-            self._unit_frames[seq] = self._build_unit_frame(
-                seq, p, self._unit_partitions(i)
+    def _build_unit_frame(self, unit: tuple[int, DataFrame], n_parts: int) -> DataFrame:
+        seq, p = unit
+        if not self.packed:
+            # row mode: repartition by doc_id -> docs complete per
+            # partition; sortWithinPartitions clusters each term's rows so
+            # the columnar cache's min/max stats prune the per-query term
+            # filter to a handful of batches
+            return (
+                p.select("term", "doc_id", "positions")
+                .repartition(n_parts, "doc_id")
+                .sortWithinPartitions("term")
+                .persist()
             )
-        from bliss_rs_spark.sources.index_store import _run_parallel
-
-        # warm caches outside any query; independent per-unit counts overlap
-        _run_parallel([f.count for f in self._unit_frames.values()])
-        self._set_tombstones(tombstones)
-
-    # -- construction helpers (shared with refresh) ---------------------------
-
-    def _unit_partitions(self, index_in_units: int) -> int:
-        # base unit gets full parallelism; small segment units get fewer
-        # partitions so per-query task count stays bounded (maintain()
-        # bounds unit fan-out) — mirrors WandServer._unit_partitions
-        if index_in_units == 0:
-            return self._target_partitions
-        return max(1, self._target_partitions // 8)
-
-    def _build_unit_frame(self, seq: int, p: DataFrame, n_parts: int) -> DataFrame:
         cols = [
             c
             for c in ("shard", "term", *_PACK_STAT_COLS, "pblob")
@@ -863,193 +795,40 @@ class PhraseServer:
             .persist()
         )
 
-    def _set_tombstones(self, tombstones: DataFrame | None) -> None:
-        """Per-(unit, shard) dead doc_ids, computed DISTRIBUTED over the
-        churn-sized tombstones frame (WandServer's _dead_sets_df machinery)
-        and shipped to workers ONCE per (re)point as a broadcast variable —
-        round 5: a per-query broadcast JOIN re-collected and re-shipped the
-        same frame on every query's new plan; the variable carries identical
-        bytes once and keeps the per-query plan exchange-free.  Bounded by
-        maintain()'s tombstone ceilings; compact_full resets it."""
-        old = self._dead_bc
-        self._dead_bc = None
-        if tombstones is not None and tombstones.limit(1).count() > 0:
-            from bliss_rs_spark.operators.wand import _dead_sets_df
-
-            rows = _dead_sets_df(
-                tombstones,
-                [(seq, None, None) for seq in self._unit_frames],
-                self.cfg.n_doc_shards,
-            ).collect()
-            self._dead_bc = self.spark.sparkContext.broadcast(
-                {
-                    (int(r["unit"]), int(r["shard"])): bytes(r["dead"])
-                    for r in rows
-                }
-            )
-        if old is not None:
-            old.unpersist()
+    def _warm_unit(self, seq: int) -> int:
+        return self._unit_frames[seq].count()
 
     @staticmethod
-    def _store_units(
-        spark: SparkSession, store, cfg
-    ) -> tuple[list[tuple[int, DataFrame]], dict[int, tuple]]:
-        """The CURRENT snapshot's positional units: one per referenced
-        segment carrying a positional frame (packed + cached lazily, keyed
-        by the immutable segment name), or a single unit for layout-1
-        stores.  Returns (units, fingerprints)."""
-        import os
-
-        from bliss_rs_spark.sources.index_store import dir_fingerprint
-
-        meta = store.meta()
-        units: list[tuple[int, DataFrame]] = []
-        fps: dict[int, tuple] = {}
-        if "segments" in meta:
-            for seg in meta["segments"]:
-                src = os.path.join(store.segments_dir, seg, "positional")
-                if not os.path.isdir(src):
-                    continue
-                seq = store.seg_seq(seg)
-                cache = _ensure_pos_unit_cache(spark, store, seg, src, cfg)
-                units.append((seq, spark.read.parquet(cache)))
-                fps[seq] = dir_fingerprint(cache)
-        else:
-            key = "snap_" + store.current_snapshot()
-            src = os.path.join(store.snapshot_dir(), "positional")
-            cache = _ensure_pos_unit_cache(spark, store, key, src, cfg)
-            units.append((0, spark.read.parquet(cache)))
-            fps[0] = dir_fingerprint(cache)
-        return units, fps
+    def _pack_unit(rows: DataFrame, cfg: IndexConfig) -> DataFrame:
+        return pack_positional(rows.select("term", "doc_id", "positions"), cfg)
 
     @classmethod
     def from_store(
-        cls,
-        spark: SparkSession,
-        store,
-        packed: bool = True,
-        cache_pack: bool = True,
+        cls, spark: SparkSession, store, packed: bool = True
     ) -> "PhraseServer":
-        """Serve the CURRENT snapshot.
-
-        Default (packed + cache_pack): per-UNIT packs from the derived
-        cache — each segment's pack is built at most once across the
-        store's LIFETIME (immutable key), so a new snapshot's first serve
-        packs only segments it hasn't seen; tombstones ride in as dead
-        sets.  ``cache_pack=False`` packs the tombstone-filtered view in
-        memory (no disk cache); ``packed=False`` serves raw rows."""
+        """Serve the CURRENT snapshot.  Default: per-unit packs from the
+        derived cache, tombstones as dead sets.  ``packed=False`` serves
+        the raw rows of store.load('positional'), already the
+        tombstone-filtered union across segments; that frame still
+        recomputes from segment paths on executor loss, so it pins its
+        snapshot too, but it cannot refresh()."""
         cfg_s = store.config()
         if not cfg_s.store_positions:
             raise ValueError(
                 "index was built without positions; rebuild with "
                 "IndexConfig(store_positions=True) to serve phrase queries"
             )
-        if not packed or not cache_pack:
-            # store.load('positional') is already the tombstone-filtered
-            # union across segments — no dead sets needed (the persisted
-            # frame still recomputes from segment paths on executor loss,
-            # so it pins its snapshot like the unit path does)
+        fps: dict[int, tuple] = {}
+        if packed:
+            units, fps = cls._store_units(spark, store)
             srv = cls(
-                spark, store.load(spark, "positional"), cfg_s, packed=packed
+                spark, None, cfg_s, units=units,
+                tombstones=cls._store_tombstones(spark, store),
             )
-            srv._pin = store.pin_snapshot(
-                store.current_snapshot(), note="PhraseServer"
-            )
-            return srv
-        units, fps = cls._store_units(spark, store, cfg_s)
-        srv = cls(
-            spark,
-            None,
-            cfg_s,
-            packed=True,
-            units=units,
-            tombstones=(
-                store.tombstone_frame(spark)
-                if store.has_tombstones(spark) else None
-            ),
-        )
-        srv._unit_fps = fps
-        # pin the snapshot whose segments (and their derived pos_units
-        # caches) this server reads, so gc() after a later compaction can
-        # never prune them from under a live reader (same live-reader
-        # contract as WandServer._sync_pins)
-        srv._pin = store.pin_snapshot(
-            store.current_snapshot(), note="PhraseServer"
-        )
+        else:
+            srv = cls(spark, store.load(spark, "positional"), cfg_s, packed=False)
+        srv._attach_store(store, fps)
         return srv
-
-    def refresh(self, store) -> dict:
-        """Re-point a live server at the store's CURRENT snapshot WITHOUT
-        re-packing or re-caching unchanged units — the serving-across-
-        updates move (round-4 verdict "what's missing" #1): a 1%-delta
-        segment update costs the delta segment's pack + the churn-sized
-        dead frame, never a full-corpus re-pack.
-
-        Unit identity is the derived cache's (relpath, inode, size)
-        fingerprint under the immutable segment key: equal -> the cached
-        partitions are kept verbatim; new segments pack+cache; vanished
-        units (compaction) unpersist.  Returns
-        {"reused_units": [...], "rebuilt_units": [...]}."""
-        if not self._store_mode:
-            raise ValueError(
-                "refresh() requires a PhraseServer built by "
-                "from_store(packed=True, cache_pack=True)"
-            )
-        cfg_s = store.config()
-        units, fps = self._store_units(self.spark, store, cfg_s)
-        reused: list[int] = []
-        rebuilt: list[int] = []
-        new_frames: dict[int, DataFrame] = {}
-        for i, (seq, p) in enumerate(units):
-            old_fp = self._unit_fps.get(seq)
-            if (
-                seq in self._unit_frames
-                and old_fp is not None
-                and old_fp == fps.get(seq)
-            ):
-                new_frames[seq] = self._unit_frames[seq]
-                reused.append(seq)
-            else:
-                f = self._build_unit_frame(seq, p, self._unit_partitions(i))
-                f.count()
-                new_frames[seq] = f
-                rebuilt.append(seq)
-        for seq, f in self._unit_frames.items():
-            if new_frames.get(seq) is not f:
-                f.unpersist()
-        self._unit_frames = new_frames
-        self._unit_fps = fps
-        self._set_tombstones(
-            store.tombstone_frame(self.spark)
-            if store.has_tombstones(self.spark) else None
-        )
-        # re-point the gc() pin: every kept unit's segment is referenced by
-        # the NEW snapshot (units come from its manifest), so the old pin
-        # can be released once the new one is placed
-        old_pin = self._pin
-        self._pin = store.pin_snapshot(
-            store.current_snapshot(), note="PhraseServer"
-        )
-        if old_pin is not None:
-            store.release_pin(old_pin)
-        return {"reused_units": reused, "rebuilt_units": rebuilt}
-
-    # -- query ----------------------------------------------------------------
-
-    def _scan(self, terms: list[str]) -> DataFrame:
-        """Per-query frame: the cached partitions filtered to the query's
-        terms — all narrow operations, no shuffle and no broadcast exchange
-        (round 5: dead sets ride in as a broadcast VARIABLE shipped once
-        per (re)point, not a per-query join; union concatenates child
-        partitions)."""
-        flt = F.col("term").isin(terms)
-        if not self.packed:
-            return self.pos.filter(flt)
-        u = None
-        for seq in sorted(self._unit_frames):
-            pf = self._unit_frames[seq].filter(flt)
-            u = pf if u is None else u.unionByName(pf)
-        return u
 
     def set_filter(
         self, name: str, allow_df: DataFrame, mode: str = "allow"
@@ -1058,59 +837,11 @@ class PhraseServer:
         (filter_name=...): ``allow_df`` is a (doc_id) frame — the permitted
         docs (mode='allow') or the EXCLUDED docs (mode='deny', the
         complement route: a non-selective predicate like lang='en' at 60%
-        of 10^9 docs ships its SMALL complement instead).  The set is
-        encoded DISTRIBUTED — one delta+varbyte blob per doc shard (the
-        WandServer _allow_sets_df shape) — and only those ENCODED bytes
-        ever reach the driver (round-5 verdict #2: the old path funneled
-        raw ids through a driver-side fromiter; encoded blobs are ~10x
-        smaller and each worker decodes only its partitions' shards,
-        memoized).  Paid once per registration, shipped once as a broadcast
-        variable, and snapshot-independent (doc ids are stable), so
-        refresh() keeps filters as-is."""
-        if mode not in ("allow", "deny"):
-            raise ValueError(f"mode must be 'allow' or 'deny', got {mode!r}")
-        shard_col = F.pmod(
-            F.xxhash64("doc_id"), F.lit(int(self.cfg.n_doc_shards))
-        ).cast("int")
+        of 10^9 docs ships its SMALL complement instead).  Each worker
+        decodes only its partitions' shards, memoized."""
+        self._put_filter(name, allow_df, mode)
 
-        def _enc(pdf: pd.DataFrame) -> pd.DataFrame:
-            from bliss_rs_spark.functions.codec import encode_doc_ids
-
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "allow": [
-                        encode_doc_ids(
-                            np.unique(pdf["doc_id"].to_numpy(np.int64))
-                        )
-                    ],
-                }
-            )
-
-        rows = (
-            allow_df.select(shard_col.alias("shard"), "doc_id")
-            .groupBy("shard")
-            .applyInPandas(_enc, "shard int, allow binary")
-            .collect()
-        )
-        blobs = {int(r["shard"]): bytes(r["allow"]) for r in rows}
-        self.drop_filter(name)
-        self._filters[name] = (
-            self.spark.sparkContext.broadcast(blobs), mode
-        )
-
-    def drop_filter(self, name: str) -> None:
-        old = self._filters.pop(name, None)
-        if old is not None:
-            old[0].unpersist()
-
-    def _allow_bc(self, filter_name: str | None):
-        """-> (broadcast of {shard: encoded bytes}, mode) or None."""
-        if filter_name is None:
-            return None
-        if filter_name not in self._filters:
-            raise KeyError(f"unknown filter {filter_name!r}; set_filter first")
-        return self._filters[filter_name]
+    # -- query ----------------------------------------------------------------
 
     def _plan_for(
         self, phrase: str, k: int, filter_name: str | None = None
@@ -1136,7 +867,7 @@ class PhraseServer:
         has_stats = self._has_stats
         uniq_terms = sorted(offsets)
         dead_bc = self._dead_bc
-        allow_bc = self._allow_bc(filter_name)
+        allow_bc = self._filter(filter_name)
 
         def kernel(batches):
             # accumulate the partition's batches: a term's rows may straddle
@@ -1213,7 +944,7 @@ class PhraseServer:
         is_packed = self.packed
         has_stats = self._has_stats
         dead_bc = self._dead_bc
-        allow_bc = self._allow_bc(filter_name)
+        allow_bc = self._filter(filter_name)
         cols = ["doc_id", "min_window"] + (
             ["win_start", "win_end"] if with_spans else []
         )
@@ -1341,22 +1072,3 @@ class PhraseServer:
                 (pid, rank + 1, d, tf) for rank, (tf, d) in enumerate(merged)
             )
         return out
-
-    def close(self):
-        if self._pin is not None:  # release the gc() pin
-            import os
-
-            try:
-                os.remove(self._pin)
-            except OSError:
-                pass
-            self._pin = None
-        if not self.packed:
-            self.pos.unpersist()
-            return
-        for f in self._unit_frames.values():
-            f.unpersist()
-        if self._dead_bc is not None:
-            self._dead_bc.unpersist()
-        for name in list(self._filters):
-            self.drop_filter(name)

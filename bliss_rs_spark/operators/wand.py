@@ -36,6 +36,12 @@ from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.operators.bm25 import query_terms
+from bliss_rs_spark.operators.unit_server import (
+    _dead_sets_df,
+    _doc_shard,
+    _id_sets_df,
+    _UnitServer,
+)
 
 
 @functools.lru_cache(maxsize=64)
@@ -485,46 +491,6 @@ def _as_tombstone_df(
     )
 
 
-def _dead_sets_df(
-    tomb_df: DataFrame,
-    units: list[tuple[int, DataFrame, DataFrame | None]],
-    n_doc_shards: int,
-) -> DataFrame:
-    """(unit, shard, dead) — each (unit, shard)'s tombstoned doc_ids as one
-    encoded binary row, computed DISTRIBUTED over the churn-sized tombstones
-    frame.  A doc is dead in unit seq iff before_seq > seq; shard placement
-    replays the packer's pmod(xxhash64(doc_id), n_doc_shards).  The result
-    co-groups / co-partitions with the packed blocks it masks, so no query
-    path ever materializes the tombstone set on the driver (the round-3
-    verdict's last corpus-fraction-sized driver structure)."""
-    shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(int(n_doc_shards))).cast("int")
-    parts = None
-    for seq, _, _ in units:
-        pp = tomb_df.filter(F.col("before_seq") > F.lit(int(seq))).select(
-            F.lit(int(seq)).alias("unit"), shard_col.alias("shard"), "doc_id"
-        )
-        parts = pp if parts is None else parts.unionByName(pp)
-
-    def _enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bliss_rs_spark.functions.codec import encode_doc_ids
-
-        return pd.DataFrame(
-            {
-                "unit": [int(pdf["unit"].iloc[0])],
-                "shard": [int(pdf["shard"].iloc[0])],
-                "dead": [
-                    encode_doc_ids(
-                        np.unique(pdf["doc_id"].to_numpy(np.int64))
-                    )
-                ],
-            }
-        )
-
-    return parts.groupBy("unit", "shard").applyInPandas(
-        _enc, "unit int, shard int, dead binary"
-    )
-
-
 def _allow_sets_df(
     allow_df: DataFrame, units: list[tuple[int, DataFrame, DataFrame | None]],
     n_doc_shards: int,
@@ -535,30 +501,15 @@ def _allow_sets_df(
     same allow set applies to every unit.  Shards with no matching doc get
     NO row — in allow mode the kernel treats a missing row as
     nothing-allowed (the complement convention of dead sets)."""
-    shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(int(n_doc_shards))).cast("int")
     parts = None
     for seq, _, _ in units:
         pp = allow_df.select(
-            F.lit(int(seq)).alias("unit"), shard_col.alias("shard"), "doc_id"
+            F.lit(int(seq)).alias("unit"),
+            _doc_shard(n_doc_shards).alias("shard"),
+            "doc_id",
         )
         parts = pp if parts is None else parts.unionByName(pp)
-
-    def _enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bliss_rs_spark.functions.codec import encode_doc_ids
-
-        return pd.DataFrame(
-            {
-                "unit": [int(pdf["unit"].iloc[0])],
-                "shard": [int(pdf["shard"].iloc[0])],
-                "allow": [
-                    encode_doc_ids(np.unique(pdf["doc_id"].to_numpy(np.int64)))
-                ],
-            }
-        )
-
-    return parts.groupBy("unit", "shard").applyInPandas(
-        _enc, "unit int, shard int, allow binary"
-    )
+    return _id_sets_df(parts, ("unit", "shard"), "allow")
 
 
 def _shard_meta_df(
@@ -685,7 +636,7 @@ def wand_topk_units(
     pruned = packed_u.filter(F.col("term").isin(list(idfs)))
     tomb_df = _as_tombstone_df(spark, tombstones)
     dead_df = (
-        _dead_sets_df(tomb_df, units, cfg.n_doc_shards)
+        _dead_sets_df(tomb_df, [u[0] for u in units], cfg.n_doc_shards)
         if tomb_df is not None
         else None
     )
@@ -745,45 +696,39 @@ def wand_topk_units(
     return per.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-class WandServer:
+class WandServer(_UnitServer):
     """Low-latency serving mode: warm top-k in ONE shuffle-free Spark job.
+    The unit lifecycle (cached per-unit frames, refresh, dead sets, filters,
+    gc pins) is _UnitServer's, operators/unit_server.py.
 
     The batch path (wand_topk) pays a groupBy('shard') shuffle plus a merge
     job per query — fine for batch scoring, ~seconds of scheduling for a
     single query.  The server instead:
 
-    - repartitions each UNIT's packed frame ONCE by shard and caches it, so
-      every shard is wholly inside one partition BY CONSTRUCTION — the
-      invariant survives executor loss + partition recompute (hash
-      partitioning is deterministic), unlike file-layout-based placement,
-      which silently breaks if a lost partition is re-planned under default
-      file-split confs.  Per-unit caches (round 4) are what makes
-      ``refresh()`` incremental: after a 1%-delta segment update only the
-      new unit is cached, the base pack's partitions are reused verbatim
-      (content-fingerprinted via hard-link-stable inodes);
     - keeps per-shard doc maps DISTRIBUTED as sentinel rows (term NULL)
-      co-partitioned with their shard's blocks, and per-(unit, shard) dead
-      sets as a broadcast VARIABLE shipped once per (re)point (round 5 —
-      the per-query broadcast JOIN re-collected and re-shipped the same
-      churn-bounded frame on every query; rebuilt alone when churn changed):
-      ordinal->doc_id resolution and tombstone masking happen map-side
-      inside the kernel (worker-memoized), so query task closures are O(1).
-      The idf table is collected only when the vocab is small (<= 2M terms,
-      or driver_idf=True); bigger vocabs stay persisted distributed and
-      each query's terms resolve via one tiny filtered collect with a
-      bounded LRU (10^12-file corpora have vocabularies no driver can
-      hold).  Driver memory is O(warm query terms), never O(corpus) and
-      never O(vocab): at 10^9 docs the doc maps alone are ~8 GB —
-      collecting them (round-2 design) cannot serve from one driver;
+      co-partitioned with their shard's blocks: ordinal->doc_id resolution
+      and tombstone masking happen map-side inside the kernel
+      (worker-memoized), so query task closures are O(1);
+    - collects the idf table only when the vocab is small (<= 2M terms, or
+      driver_idf=True); bigger vocabs stay persisted distributed and each
+      query's terms resolve via one tiny filtered collect with a bounded
+      LRU.  Driver memory is O(warm query terms), never O(corpus) and never
+      O(vocab): at 10^9 docs the doc maps alone are ~8 GB;
     - per query: filter(term isin ... or sentinel) over the cached
       partitions -> mapInPandas runs the SAME _wand_shard kernel per
       complete shard -> collect of (shards x k) rows -> exact driver merge.
-      No shuffle, no window, one stage.
+      No shuffle, no window, one stage.  Its warm hook audits each new
+      unit's placement (``single_stage``); should a shard ever straddle
+      partitions, queries take the exact shuffle path instead.
 
     Latency target (BENCH/BASELINE.md): <500ms warm top-10 on the 1M-doc
     store, vs ~3.3s through the batch path.  Rank-identical to wand_topk
     (same kernel, same tie-breaks; tested).
     """
+
+    _null_key_rows = True
+    _base_reads_snapshot = True
+    _store_mode = True  # a direct server may re-point onto a store too
 
     def __init__(
         self,
@@ -798,54 +743,26 @@ class WandServer:
         tombstones: dict[int, int] | DataFrame | None = None,
         driver_idf: bool | None = None,
     ):
-        self.spark = spark
         self.cfg = cfg or IndexConfig()
         self.avgdl = float(avgdl)
-        if target_partitions is None:
-            target_partitions = spark.sparkContext.defaultParallelism
-        self._target_partitions = max(int(target_partitions), 1)
+        self._ts_fp: tuple | None = None  # term_stats fingerprint (from_store)
+        self._driver_idf_pref = driver_idf  # caller's choice, kept by refresh
         if units is None:
             units = [(0, packed, doc_map)]
-        self._units = units
-        self._unit_fps: dict[int, tuple] = {}  # filled by from_store/refresh
-        self._unit_ok: dict[int, bool] = {}  # per-unit placement audit memo
-        # which snapshot dir each unit's frame reads (base unit only;
-        # segment units read segment dirs, retained via snapshot refs) —
-        # drives the gc() pin set so reused frames never dangle
-        self._unit_snaps: dict[int, str | None] = {}
-        self._pins: dict[str, str] = {}  # snapshot -> pin file (from_store)
-        self._store_snapshot: str | None = None
-        self._ts_fp: tuple | None = None
-        self._driver_idf_pref = driver_idf  # caller's choice, kept by refresh
-        self._setup_idf(term_stats, driver_idf)
+        self._init_units(
+            spark, units, target_partitions, self.cfg.n_doc_shards,
+            _as_tombstone_df(spark, tombstones),
+            lambda: self._setup_idf(term_stats, driver_idf),
+        )
 
-        # --- per-UNIT persisted frames (round 4): each unit caches
-        # independently so refresh() can keep untouched units (a 1%-delta
-        # segment update must not re-cache a 10^9-doc base pack).  The base
-        # unit gets full parallelism; small segment units get fewer
-        # partitions so per-query task count stays bounded (maintain()
-        # bounds unit fan-out).
-        self._unit_frames: dict[int, DataFrame] = {}
-        for i, (seq, p, dm) in enumerate(units):
-            self._unit_frames[seq] = self._build_unit_frame(
-                seq, p, dm, self._unit_partitions(i)
-            )
+    @property
+    def _unit_ok(self) -> dict[int, bool]:
+        """Per-unit placement verdicts (the warm hook's results)."""
+        return self._unit_warm
 
-        # --- tombstones: per-(unit, shard) dead sets computed distributed,
-        # then shipped ONCE per (re)point as a broadcast variable (see
-        # _set_tombstones), REBUILT alone on refresh when only churn changed
-        self._dead_bc = None
-        self._set_tombstones(tombstones)
-        # --- named metadata filters (set_filter): allow sets, same shape
-        self._filters: dict[str, tuple[DataFrame, object]] = {}
-        self.single_stage = self._placement_ok()
-
-    # -- construction helpers (shared with refresh) --------------------------
-
-    def _unit_partitions(self, index_in_units: int) -> int:
-        if index_in_units == 0:
-            return self._target_partitions
-        return max(1, self._target_partitions // 8)
+    @property
+    def single_stage(self) -> bool:
+        return all(self._unit_warm.get(seq, False) for seq in self._unit_frames)
 
     def _setup_idf(
         self,
@@ -881,13 +798,11 @@ class WandServer:
             self._idf_cache = OrderedDict()
 
     def _build_unit_frame(
-        self, seq: int, p: DataFrame, dm: DataFrame | None, n_parts: int
+        self, unit: tuple[int, DataFrame, DataFrame | None], n_parts: int
     ) -> DataFrame:
         """One unit's cached serving frame: packed rows + doc-map sentinel
-        rows (term NULL), hash-repartitioned by shard so every shard lands
-        wholly in one partition structurally — a recomputed partition
-        (executor loss) replays the same deterministic exchange, so
-        correctness never depends on file layout or session confs."""
+        rows (term NULL), hash-repartitioned by shard."""
+        seq, p, dm = unit
         part = p.withColumn("unit", F.lit(int(seq))).withColumn(
             "doc_ids", F.lit(None).cast("binary")
         )
@@ -902,260 +817,75 @@ class WandServer:
             part = part.unionByName(sentinel, allowMissingColumns=True)
         return part.repartition(n_parts, "shard").persist()
 
-    def _set_tombstones(
-        self, tombstones: dict[int, int] | DataFrame | None
-    ) -> None:
-        """Dead sets are COMPUTED distributed (_dead_sets_df over the
-        churn-sized tombstones frame) and then shipped to workers ONCE per
-        (re)point via a Spark broadcast variable keyed by (unit, shard) —
-        round 5: the previous per-query broadcast JOIN re-collected and
-        re-shipped the same frame on every query's new plan (~0.6s/query
-        measured at 1M/7 units) and put a BroadcastExchange in the serving
-        plan.  A broadcast variable carries identical bytes (a broadcast
-        hash join materializes its build side driver-side anyway), shipped
-        once, and the per-query plan stays scan -> filter -> mapInPandas —
-        truly single-stage even under churn.  Size is bounded by
-        maintain()'s tombstone ceilings, and compact_full resets it."""
-        tomb_df = _as_tombstone_df(self.spark, tombstones)
-        self._tomb_df = tomb_df
-        old = self._dead_bc
-        has_tomb = tomb_df is not None and tomb_df.limit(1).count() > 0
-        if has_tomb:
-            dead_rows = _dead_sets_df(
-                tomb_df, self._units, self.cfg.n_doc_shards
-            ).collect()
-            self._dead_bc = self.spark.sparkContext.broadcast(
-                {
-                    (int(r["unit"]), int(r["shard"])): bytes(r["dead"])
-                    for r in dead_rows
-                }
+    def _warm_unit(self, seq: int) -> bool:
+        """Placement audit of one new unit (True iff no shard straddles
+        partitions), doubling as its cache warm-up.  Reused units keep
+        their verdict: their cached partitioning IS what is reused."""
+        bad = (
+            self._unit_frames[seq]
+            .select("unit", "shard")
+            .groupBy(F.spark_partition_id().alias("pid"), "unit", "shard")
+            .count()
+            .groupBy("unit", "shard")
+            .count()
+            .filter(F.col("count") > 1)
+            .count()
+        )
+        return bad == 0
+
+    @staticmethod
+    def _term_stats_fp(store) -> tuple:
+        import os
+
+        from bliss_rs_spark.sources.index_store import dir_fingerprint
+
+        return dir_fingerprint(os.path.join(store.snapshot_dir(), "term_stats"))
+
+    @classmethod
+    def from_store(cls, spark: SparkSession, store) -> "WandServer":
+        units, fps = cls._store_units(spark, store)
+        srv = cls(
+            spark,
+            None,
+            store.load(spark, "term_stats"),
+            store.meta()["avgdl"],
+            store.config(),
+            units=units,
+            # the FRAME, not a collected dict: tombstones stay distributed
+            # (churn at 10^9-doc scale never lands on the driver)
+            tombstones=cls._store_tombstones(spark, store),
+        )
+        srv._ts_fp = cls._term_stats_fp(store)
+        srv._attach_store(store, fps)
+        return srv
+
+    def _refresh_extras(self, store) -> None:
+        """avgdl follows the snapshot; the idf table rebuilds only when the
+        term_stats fingerprint changed, with the idf-mode decision pinned
+        from init (no vocab re-count)."""
+        self.avgdl = float(store.meta()["avgdl"])
+        ts_fp = self._term_stats_fp(store)
+        if ts_fp != self._ts_fp:
+            old_ts = self._ts
+            self._setup_idf(
+                store.load(self.spark, "term_stats"),
+                self._driver_idf_pref,
+                known_driver_idf=self._driver_idf,
             )
-        else:
-            self._dead_bc = None
-        if old is not None:
-            old.unpersist()
+            old_ts.unpersist()
+            self._ts_fp = ts_fp
 
     def set_filter(self, name: str, allow_df: DataFrame) -> None:
         """Register a named metadata filter for ``query(filter_name=...)``:
         ``allow_df`` is a (doc_id) frame of the docs a filtered query may
         return (e.g. doc_stats.filter(lang == 'python').select('doc_id')).
-
-        The per-(unit, shard) allow sets are computed DISTRIBUTED
-        (_allow_sets_df) and shipped once as a broadcast variable — the
-        filter is paid at registration, not per query, and the serving
-        plan stays exchange-free.  Sizing is by the MATCHING side, which is
-        the small side for the selective filters metadata filtering exists
-        for; for non-selective predicates register the complement as
-        tombstones semantics instead (see wand_topk_units).  Corpus stats
-        (idf/avgdl) are unchanged by design: Lucene filter semantics, the
-        filter restricts candidates, it does not re-weight the corpus.
-        Refresh() recomputes every registered filter against the new unit
-        set from its retained frame."""
-        self.drop_filter(name)
-        self._filters[name] = (allow_df, self._build_filter_bc(allow_df))
-
-    def drop_filter(self, name: str) -> None:
-        old = self._filters.pop(name, None)
-        if old is not None and old[1] is not None:
-            old[1].unpersist()
-
-    def _build_filter_bc(self, allow_df: DataFrame):
-        rows = _allow_sets_df(allow_df, self._units, self.cfg.n_doc_shards).collect()
-        return self.spark.sparkContext.broadcast(
-            {(int(r["unit"]), int(r["shard"])): bytes(r["allow"]) for r in rows}
-        )
-
-    def _placement_ok(self, audit_units: list[int] | None = None) -> bool:
-        """Belt-and-suspenders check of the one-shard-one-partition
-        invariant; doubles as cache warm-up for the audited units.  The
-        audit is PER UNIT and memoized (round-5: auditing every unit on
-        every refresh materialized the full columnar cache of reused units
-        — all columns — cancelling refresh's reuse savings; a reused
-        unit's verdict cannot change, its cached partitioning IS the thing
-        being reused)."""
-        if audit_units is None:
-            audit_units = [s for s in self._unit_frames if s not in self._unit_ok]
-
-        def _audit(seq: int) -> int:
-            return (
-                self._unit_frames[seq]
-                .select("unit", "shard")
-                .groupBy(F.spark_partition_id().alias("pid"), "unit", "shard")
-                .count()
-                .groupBy("unit", "shard")
-                .count()
-                .filter(F.col("count") > 1)
-                .count()
-            )
-
-        if audit_units:
-            from bliss_rs_spark.sources.index_store import _run_parallel
-
-            # independent per-unit audit jobs overlap (guide §2.6); each
-            # doubles as that unit's cache warm-up, exactly as before
-            bads = _run_parallel([(lambda q=seq: _audit(q)) for seq in audit_units])
-            for seq, bad in zip(audit_units, bads):
-                self._unit_ok[seq] = bad == 0
-        return all(
-            self._unit_ok.get(seq, False) for seq in self._unit_frames
-        )
-
-    @classmethod
-    def from_store(cls, spark: SparkSession, store) -> "WandServer":
-        import os
-
-        from bliss_rs_spark.sources.index_store import dir_fingerprint
-
-        meta = store.meta()
-        cfg_s = store.config()
-        units = store.packed_units(spark)
-        srv = cls(
-            spark,
-            store.load(spark, "packed"),
-            store.load(spark, "term_stats"),
-            meta["avgdl"],
-            cfg_s,
-            None,
-            units=units,
-            # the FRAME, not a collected dict: tombstones stay distributed
-            # (churn at 10^9-doc scale never lands on the driver)
-            tombstones=store.load(spark, "tombstones")
-            if "segments" in store.meta() and store.has_tombstones(spark)
-            else None,
-        )
-        srv._unit_fps = store.packed_unit_fingerprints()
-        snap = store.current_snapshot()
-        srv._store_snapshot = snap
-        srv._ts_fp = dir_fingerprint(
-            os.path.join(store.snapshot_dir(), "term_stats")
-        )
-        # only the BASE unit's frame reads the snapshot dir itself
-        srv._unit_snaps = {
-            seq: (snap if i == 0 else None) for i, (seq, _, _) in enumerate(units)
-        }
-        srv._sync_pins(store)
-        return srv
-
-    def _sync_pins(self, store) -> None:
-        """Hold a gc() pin on every snapshot a cached frame still reads
-        (round-5 ADVICE medium: refresh() reuses fingerprint-stable unit
-        frames whose plans point at the OLD snapshot's paths; without a
-        pin, gc() could expire that snapshot and a cache
-        eviction/recompute would read deleted files).  Pin set = the
-        CURRENT snapshot (keeps the segments every unit references) plus
-        each reused base unit's source snapshot."""
-        need = {s for s in self._unit_snaps.values() if s}
-        if self._store_snapshot:
-            need.add(self._store_snapshot)
-        for snap in need - set(self._pins):
-            self._pins[snap] = store.pin_snapshot(snap, note="WandServer")
-        for snap in set(self._pins) - need:
-            store.release_pin(self._pins.pop(snap))
-
-    def refresh(self, store) -> dict:
-        """Re-point a live server at the store's CURRENT snapshot WITHOUT
-        re-caching unchanged data — the serving-across-updates move a
-        10^9-doc deployment needs: a 1%-delta segment update must cost the
-        delta, not a full corpus re-cache.
-
-        Per unit, the packed bytes are fingerprinted ((relpath, inode,
-        size); hard-linked carry preserves inodes across snapshots): equal
-        fingerprint -> the existing cached partitions are kept verbatim;
-        changed/new units rebuild; vanished units (compaction) unpersist.
-        term_stats, avgdl and the dead-set frame rebuild when the snapshot
-        changed — they are churn-sized.  Reused frames keep reading their
-        original snapshot's paths, which stay valid because the server
-        PINS those snapshots against gc() (_sync_pins — the explicit
-        live-reader contract, round-5; same semantics Iceberg gives
-        concurrent readers via snapshot references).  Returns
-        {"reused_units": [...], "rebuilt_units": [...]}.
-
-        Round-5 cost model (verdict missing #4 — refresh must be strictly
-        cheaper than re-init): an unchanged snapshot short-circuits to a
-        no-op; otherwise reused units skip BOTH the re-cache and the
-        placement audit (memoized per unit — auditing a reused frame
-        materialized its full columnar cache for nothing), the idf-mode
-        decision is pinned from init (no vocab count), and an unchanged
-        term_stats fingerprint skips the idf rebuild entirely.
-
-        Reference analogue: the reference mutates its library in place and
-        re-queries the same connection (/root/reference/src/library.rs:
-        1040-1084); an immutable-snapshot engine gets the equivalent by
-        atomically swapping the unit set under a warm server."""
-        import os
-
-        from bliss_rs_spark.sources.index_store import dir_fingerprint
-
-        spark = self.spark
-        new_snap = store.current_snapshot()
-        if (
-            self._store_snapshot is not None
-            and new_snap == self._store_snapshot
-        ):
-            # nothing committed since this server (re-)pointed here
-            return {
-                "reused_units": sorted(self._unit_frames),
-                "rebuilt_units": [],
-            }
-        meta = store.meta()
-        new_units = store.packed_units(spark)
-        new_fps = store.packed_unit_fingerprints()
-        reused: list[int] = []
-        rebuilt: list[int] = []
-        new_frames: dict[int, DataFrame] = {}
-        new_unit_snaps: dict[int, str | None] = {}
-        for i, (seq, p, dm) in enumerate(new_units):
-            old_fp = self._unit_fps.get(seq)
-            if (
-                seq in self._unit_frames
-                and old_fp is not None
-                and old_fp == new_fps.get(seq)
-            ):
-                new_frames[seq] = self._unit_frames[seq]
-                new_unit_snaps[seq] = self._unit_snaps.get(seq)
-                reused.append(seq)
-            else:
-                new_frames[seq] = self._build_unit_frame(
-                    seq, p, dm, self._unit_partitions(i)
-                )
-                new_unit_snaps[seq] = new_snap if i == 0 else None
-                rebuilt.append(seq)
-        for seq, f in self._unit_frames.items():
-            if new_frames.get(seq) is not f:
-                f.unpersist()
-                self._unit_ok.pop(seq, None)
-        self._unit_frames = new_frames
-        self._units = new_units
-        self._unit_fps = new_fps
-        self._unit_snaps = new_unit_snaps
-        self._store_snapshot = new_snap
-        self._sync_pins(store)
-        self.avgdl = float(meta["avgdl"])
-        new_ts_fp = dir_fingerprint(
-            os.path.join(store.snapshot_dir(), "term_stats")
-        )
-        if new_ts_fp != self._ts_fp:
-            old_ts = self._ts
-            self._setup_idf(
-                store.load(spark, "term_stats"),
-                self._driver_idf_pref,
-                known_driver_idf=self._driver_idf,
-            )
-            old_ts.unpersist()
-            self._ts_fp = new_ts_fp
-        self._set_tombstones(
-            store.load(spark, "tombstones")
-            if "segments" in meta and store.has_tombstones(spark)
-            else None
-        )
-        # registered filters re-shard against the new unit set (doc_ids are
-        # stable across snapshots, so the retained allow frame stays valid)
-        for name, (allow_df, old_bc) in list(self._filters.items()):
-            self._filters[name] = (allow_df, self._build_filter_bc(allow_df))
-            if old_bc is not None:
-                old_bc.unpersist()
-        self.single_stage = self._placement_ok(audit_units=rebuilt)
-        return {"reused_units": reused, "rebuilt_units": rebuilt}
+        Sizing is by the MATCHING side, the small side for the selective
+        filters metadata filtering exists for; for non-selective predicates
+        pass the complement as tombstones instead (see wand_topk_units).
+        Corpus stats (idf/avgdl) are unchanged by design: Lucene filter
+        semantics, the filter restricts candidates, it does not re-weight
+        the corpus."""
+        self._put_filter(name, allow_df, "allow")
 
     # lazy-mode warm-term budget: ~256k cached (term, idf) pairs is a few
     # tens of MB of driver memory — a hard bound (round-4 ADVICE fix: the
@@ -1206,25 +936,18 @@ class WandServer:
         idfs = self._resolve_idfs(terms)
         if not idfs:
             return []
-        allow_bc = None
-        if filter_name is not None:
-            if filter_name not in self._filters:
-                raise KeyError(f"unknown filter {filter_name!r}; set_filter first")
-            allow_bc = self._filters[filter_name][1]
+        flt = self._filter(filter_name)
         if not self.single_stage:  # fallback: the exact shuffle path
             rows = wand_topk_units(
                 self.spark, self._units, self._ts, self.avgdl,
                 query_text, k, self.cfg, lang, self._tomb_df,
-                allowed=(
-                    self._filters[filter_name][0]
-                    if filter_name is not None
-                    else None
-                ),
+                allowed=self._filters[filter_name][2] if flt else None,
             ).collect()
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
         k1, b, avgdl, kk = self.cfg.k1, self.cfg.b, self.avgdl, k
         dead_bc = self._dead_bc  # Broadcast handle; picklable into closures
+        allow_bc = flt[0] if flt is not None else None
 
         def kernel(batches):
             by_us: dict[tuple[int, int], list] = {}
@@ -1253,7 +976,7 @@ class WandServer:
                         dead = None
                 allow = None
                 if allows is not None:
-                    ab = allows.get(us)
+                    ab = allows.get(us[1])  # filters are per shard, all units
                     if ab is None:
                         continue  # filter active, nothing allowed here
                     allow = _cached_dead_ordinals(ab, maps.get(us))
@@ -1268,7 +991,7 @@ class WandServer:
                     out["score"].append(s)
             yield pd.DataFrame(out)
 
-        partials = self._serving_plan(list(idfs)).mapInPandas(
+        partials = self._scan(list(idfs)).mapInPandas(
             kernel, "doc_id long, score double"
         ).collect()
         merged = sorted(
@@ -1277,35 +1000,9 @@ class WandServer:
         )[:k]
         return [(d, s) for s, d in merged]
 
-    def _serving_plan(self, terms: list[str]) -> DataFrame:
-        """Per-query frame: union of the per-unit cached frames filtered to
-        the query's terms (+ doc-map sentinels) — all narrow operations
-        over the cached partitions, no shuffle and (round 5) no broadcast
-        exchange either: dead sets ride in as a broadcast VARIABLE shipped
-        once per (re)point, not as a per-query join."""
-        flt = F.col("term").isin(terms) | F.col("term").isNull()
-        u = None
-        for seq in sorted(self._unit_frames):
-            pf = self._unit_frames[seq].filter(flt)
-            u = pf if u is None else u.unionByName(pf)
-        return u
-
     def close(self):
-        import os
-
-        for f in self._unit_frames.values():
-            f.unpersist()
-        if self._dead_bc is not None:
-            self._dead_bc.unpersist()
-        for name in list(self._filters):
-            self.drop_filter(name)
+        super().close()
         self._ts.unpersist()
-        for path in self._pins.values():  # release gc() pins
-            try:
-                os.remove(path)
-            except OSError:
-                pass
-        self._pins = {}
 
 
 def wand_topk_batch(
@@ -1387,7 +1084,7 @@ def wand_topk_batch(
     pruned = packed_u.filter(F.col("term").isin([t for t in union_terms if t in idfs]))
     tomb_df = _as_tombstone_df(spark, tombstones)
     dead_df = (
-        _dead_sets_df(tomb_df, units, cfg.n_doc_shards)
+        _dead_sets_df(tomb_df, [u[0] for u in units], cfg.n_doc_shards)
         if tomb_df is not None
         else None
     )

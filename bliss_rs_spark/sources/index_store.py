@@ -392,7 +392,7 @@ class IndexStore:
     def tombstone_frame(self, spark: SparkSession) -> DataFrame | None:
         """The (doc_id, before_seq) tombstones frame, NEVER collected — this
         is what query paths hand to the WAND kernels, which turn it into
-        per-(unit, shard) dead sets distributed (operators/wand.py:
+        per-(unit, shard) dead sets distributed (operators/unit_server.py:
         _dead_sets_df).  None for layout-1 stores (no tombstones on disk)."""
         if "segments" not in self.meta():
             return None

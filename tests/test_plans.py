@@ -118,17 +118,18 @@ def test_phrase_server_plan_is_shuffle_free(spark):
 
 
 def test_serving_plan_exchange_free_under_churn(spark, tmp_path):
-    """Round 5: with tombstones in play, BOTH servers' per-query plans must
+    """Round 5: with tombstones in play, every server's per-query plan must
     still contain NO Exchange of any kind (dead sets ride in as a broadcast
     VARIABLE, not a per-query broadcast JOIN — the join re-collected and
     re-shipped the dead frame on every query)."""
     from dataclasses import replace
 
     from bliss_rs_spark.operators.phrase import PhraseServer
+    from bliss_rs_spark.operators.trigram import TrigramServer
     from bliss_rs_spark.operators.wand import WandServer
     from bliss_rs_spark.plans.lifecycle import build_full, update_index
 
-    cfg = replace(CFG, store_positions=True)
+    cfg = replace(CFG, store_positions=True, store_trigrams=True)
     s = IndexStore(str(tmp_path / "idx"))
     docs = with_invariants(synth_documents(spark, 150, seed=42))
     build_full(spark, docs, s, cfg, checkpoint=False)
@@ -139,12 +140,15 @@ def test_serving_plan_exchange_free_under_churn(spark, tmp_path):
 
     w = WandServer.from_store(spark, s)
     p = PhraseServer.from_store(spark, s)
+    t = TrigramServer.from_store(spark, s, docs)
     try:
         assert w._dead_bc is not None and p._dead_bc is not None
+        assert t._dead_bc is not None
         for df in (
-            w._serving_plan(["varbyte", "merge"]),
+            w._scan(["varbyte", "merge"]),
             p._scan(["fast", "merge"]),
             p._plan_for("fast merge", 10),
+            t.candidates_df("fast merge"),
         ):
             plan = _explain(df)
             query_side = plan.split("InMemoryRelation")[0]
@@ -153,3 +157,4 @@ def test_serving_plan_exchange_free_under_churn(spark, tmp_path):
     finally:
         w.close()
         p.close()
+        t.close()

@@ -106,6 +106,7 @@ def test_rarest_k_gram_budget_still_exact(docs, tri):
         ("foo|bar", []),  # top-level alternation: nothing guaranteed
         ("\\d+\\.\\d+", ["."]),
         ("^import\\s+os$", ["import", "os"]),
+        ("aa{|", []),  # "{" opening no quantifier: bail, "|" not swallowed
     ],
 )
 def test_regex_required_literals(pattern, want):
