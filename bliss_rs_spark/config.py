@@ -37,7 +37,7 @@ class IndexConfig:
     block_size: int = 128  # postings per block-max block
 
     # Ordinal doc-id compression: posting blocks store shard-local ordinals
-    # (index into the shard's sorted doc_id map) instead of raw xxhash64
+    # (index into the shard's sorted doc_id map) instead of raw hashed
     # doc_ids.  Random 64-bit ids delta-encode to ~9 varbyte bytes per gap;
     # ordinals to ~1-2 — the dominant size term for long posting lists.
     ordinal_docids: bool = True

@@ -81,7 +81,7 @@ def delta_decode(deltas: np.ndarray) -> np.ndarray:
 
 
 def zigzag_encode(values: np.ndarray) -> np.ndarray:
-    """int64 -> uint64 zigzag (doc_ids from xxhash64 are signed)."""
+    """int64 -> uint64 zigzag (hashed doc_ids are signed)."""
     a = np.ascontiguousarray(values, dtype=np.int64)
     return ((a << 1) ^ (a >> 63)).astype(np.uint64)
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
+from bliss_rs_spark.functions.placement import buckets_of
 from bliss_rs_spark.functions.tokenizer import term_counts
 
 
@@ -31,50 +32,6 @@ def query_terms(query_text: str, lang: str | None = None, cfg: IndexConfig | Non
     collapsed (standard BM25: one contribution per unique term)."""
     cfg = cfg or IndexConfig()
     return sorted(term_counts(query_text, lang, cfg.lang_tagging).keys())
-
-
-from collections import OrderedDict
-
-_BUCKET_MEMO: OrderedDict[tuple[str, int], int] = OrderedDict()
-_BUCKET_MEMO_MAX = 262_144
-
-
-def jvm_hash_buckets(
-    spark: SparkSession, values: list[str], n_buckets: int
-) -> list[int]:
-    """pmod(xxhash64(v), n_buckets) per distinct value, memoized (true LRU).
-
-    Spark's xxhash64 has no public Python twin, so unseen values cost one
-    tiny local-relation job — but a warm process re-probing the same query
-    terms (every serving path, every bench rep) answers from the memo with
-    ZERO jobs (guide §1.2: the probe was one scheduling round-trip per
-    query).  The memo is value-keyed, bounded, and content-independent (a
-    pure hash), so this is not result caching."""
-    missing = sorted({v for v in values if (v, n_buckets) not in _BUCKET_MEMO})
-    if missing:
-        rows = (
-            spark.createDataFrame([(v,) for v in missing], "v string")
-            .select(
-                "v",
-                F.pmod(F.xxhash64("v"), F.lit(n_buckets)).cast("int").alias("b"),
-            )
-            .collect()
-        )
-        for r in rows:
-            _BUCKET_MEMO[(r["v"], n_buckets)] = int(r["b"])
-    out = set()
-    for v in values:
-        key = (v, n_buckets)
-        _BUCKET_MEMO.move_to_end(key)
-        out.add(_BUCKET_MEMO[key])
-    while len(_BUCKET_MEMO) > _BUCKET_MEMO_MAX:
-        _BUCKET_MEMO.popitem(last=False)
-    return sorted(out)
-
-
-def term_buckets(spark: SparkSession, terms: list[str], cfg: IndexConfig) -> list[int]:
-    """Partition buckets for a term set (memoized JVM xxhash64 probe)."""
-    return jvm_hash_buckets(spark, terms, cfg.n_term_buckets)
 
 
 def bm25_score_col(cfg: IndexConfig, avgdl: float) -> F.Column:
@@ -107,7 +64,7 @@ def bm25_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
 
-    buckets = term_buckets(spark, terms, cfg)
+    buckets = buckets_of(terms, cfg.n_term_buckets)
 
     # Both predicates reach the parquet scan: term_bucket IN (...) prunes
     # whole partition directories, term IN (...) is a pushed filter that
@@ -160,7 +117,7 @@ def bm25_topk_batch(
 
     qdf = spark.createDataFrame(pairs, "query_id int, term string")
     all_terms = sorted({t for _, t in pairs})
-    buckets = term_buckets(spark, all_terms, cfg)
+    buckets = buckets_of(all_terms, cfg.n_term_buckets)
     kdf = spark.createDataFrame(list(kmap.items()), "query_id int, k int")
 
     # scan pre-filtered by pushed term IN (...) + pruned buckets; the qdf

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.corpus import with_invariants
+from bliss_rs_spark.functions.placement import hash_bucket
 from bliss_rs_spark.functions.tokenizer import with_tokens
 
 
@@ -74,9 +75,7 @@ def build_postings(tokenized: DataFrame, cfg: IndexConfig | None = None) -> Data
     )
     return tok.select(
         F.col("t.terms").alias("term"),
-        F.pmod(F.xxhash64(F.col("t.terms")), F.lit(cfg.n_term_buckets))
-        .cast("int")
-        .alias("term_bucket"),
+        hash_bucket(F.col("t.terms"), cfg.n_term_buckets).alias("term_bucket"),
         "doc_id",
         F.col("t.tfs").alias("tf"),
         "dl",

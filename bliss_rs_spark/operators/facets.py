@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
-from bliss_rs_spark.operators.bm25 import query_terms, term_buckets
+from bliss_rs_spark.functions.placement import buckets_of
+from bliss_rs_spark.operators.bm25 import query_terms
 
 __all__ = ["match_set", "facet_counts"]
 
@@ -47,7 +48,7 @@ def match_set(
     terms = query_terms(query_text, lang, cfg)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    buckets = term_buckets(spark, terms, cfg)
+    buckets = buckets_of(terms, cfg.n_term_buckets)
     pruned = postings.filter(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     )

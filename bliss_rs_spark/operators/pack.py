@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.functions.codec import encode_doc_ids, varbyte_encode
+from bliss_rs_spark.functions.placement import doc_shard
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -297,9 +298,9 @@ def build_packed_index(
     fallback for layouts where a sorted shuffle isn't available.
     """
     cfg = cfg or IndexConfig()
-    sharded = postings.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int")
-    ).select("shard", "term", "doc_id", "tf", "dl")
+    sharded = postings.withColumn("shard", doc_shard(cfg.n_doc_shards)).select(
+        "shard", "term", "doc_id", "tf", "dl"
+    )
     # sort key is (shard, term) only: the streaming packer just needs each
     # (shard, term) group contiguous — _pack_rows argsorts the group by
     # doc_id itself (stable, applied to tf/dl in lockstep), so carrying
@@ -386,7 +387,7 @@ def build_packed_index_grouped(
 
     salted = (
         postings.join(F.broadcast(hot), "term", "left")
-        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int"))
+        .withColumn("shard", doc_shard(cfg.n_doc_shards))
         .withColumn(
             "salt",
             F.when(
@@ -449,9 +450,7 @@ def build_packed_index_full(
     packed = build_packed_index(postings, term_stats, n_docs, avgdl, cfg)
     if not cfg.ordinal_docids:
         return packed, None
-    sharded = postings.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int")
-    )
+    sharded = postings.withColumn("shard", doc_shard(cfg.n_doc_shards))
     # persisted here because every caller consumes doc_map at least twice
     # (once inside the ordinalize cogroup, once as the returned frame) and
     # each pull is otherwise a full postings aggregation (guide §5).  The

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
+from bliss_rs_spark.functions.placement import doc_shard, hash_bucket
 from bliss_rs_spark.functions.tokenizer import tokenize_sql_spark, tokenize_text
 from bliss_rs_spark.operators.unit_server import _UnitServer
 
@@ -97,7 +98,7 @@ def pack_positional(
     positional: DataFrame, cfg: IndexConfig | None = None
 ) -> DataFrame:
     """Positional rows (term, doc_id, positions) -> one blob per
-    (shard, term), doc-sharded like the packed BM25 index (pmod(xxhash64)),
+    (shard, term), doc-sharded like the packed BM25 index (placement.doc_shard),
     with per-blob stats (n_pos, max_pos, min_doc, max_doc) in plain columns
     so the serving kernel can order terms rarest-first and skip decoding
     blobs whose doc range cannot intersect the surviving candidates.
@@ -108,9 +109,9 @@ def pack_positional(
     term groups and carries the tail group across batch boundaries — Python
     overhead per Arrow batch, never per (shard, term) group."""
     cfg = cfg or IndexConfig()
-    sharded = positional.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int")
-    ).select("shard", "term", "doc_id", "positions")
+    sharded = positional.withColumn("shard", doc_shard(cfg.n_doc_shards)).select(
+        "shard", "term", "doc_id", "positions"
+    )
     arranged = sharded.repartition(cfg.n_doc_shards, "shard").sortWithinPartitions(
         "shard", "term", "doc_id"
     )
@@ -194,7 +195,7 @@ def build_positional_postings(docs: DataFrame, cfg: IndexConfig | None = None) -
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
         .select(
             "term",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int").alias("term_bucket"),
+            hash_bucket("term", cfg.n_term_buckets).alias("term_bucket"),
             "doc_id",
             "positions",
             F.size("positions").alias("tf"),
@@ -785,7 +786,7 @@ class PhraseServer(_UnitServer):
         ]
         if not all(c in p.columns for c in _PACK_STAT_COLS):
             self._has_stats = False
-        # shard = pmod(xxhash64(doc_id)) -> docs complete per partition;
+        # shard = doc_shard(doc_id) -> docs complete per partition;
         # sortWithinPartitions never moves rows across partitions
         return (
             p.select(*cols)

@@ -41,11 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
-from bliss_rs_spark.operators.bm25 import (
-    bm25_score_col,
-    query_terms,
-    term_buckets,
-)
+from bliss_rs_spark.functions.placement import buckets_of, hash_bucket
+from bliss_rs_spark.operators.bm25 import bm25_score_col, query_terms
 
 __all__ = [
     "boolean_topk",
@@ -89,7 +86,7 @@ def boolean_topk(
     if not scored_terms:
         return spark.createDataFrame([], "doc_id long, score double")
 
-    buckets = term_buckets(spark, scored_terms, cfg)
+    buckets = buckets_of(scored_terms, cfg.n_term_buckets)
     pruned = postings.filter(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(scored_terms)
     )
@@ -111,7 +108,7 @@ def boolean_topk(
     )
 
     if not_terms:
-        nb = term_buckets(spark, not_terms, cfg)
+        nb = buckets_of(not_terms, cfg.n_term_buckets)
         excluded = postings.filter(
             F.col("term_bucket").isin(nb) & F.col("term").isin(not_terms)
         ).select("doc_id")
@@ -223,11 +220,7 @@ def expanded_topk(
     # ints) for partition pruning — never the expanded terms themselves
     buckets = sorted(
         r["b"]
-        for r in expanded.select(
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets))
-            .cast("int")
-            .alias("b")
-        )
+        for r in expanded.select(hash_bucket("term", cfg.n_term_buckets).alias("b"))
         .distinct()
         .collect()
     )
@@ -344,7 +337,7 @@ def bm25_scored(
     terms = query_terms(query_text, lang, cfg)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    buckets = term_buckets(spark, terms, cfg)
+    buckets = buckets_of(terms, cfg.n_term_buckets)
     pruned = postings.filter(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     )

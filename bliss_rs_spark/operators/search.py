@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
+from bliss_rs_spark.functions.placement import hash_bucket
 from bliss_rs_spark.operators.bm25 import bm25_score_col, query_terms
 
 __all__ = ["QuerySpec", "parse_query", "search"]
@@ -275,7 +276,7 @@ def search(
     buckets = sorted(
         r["b"]
         for r in rel_terms.select(
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int").alias("b")
+            hash_bucket("term", cfg.n_term_buckets).alias("b")
         )
         .distinct()
         .collect()

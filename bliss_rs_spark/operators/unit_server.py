@@ -56,12 +56,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bliss_rs_spark.functions.placement import doc_shard
 from bliss_rs_spark.sources.index_store import _run_parallel, dir_fingerprint
-
-
-def _doc_shard(n_doc_shards: int):
-    """The packers' doc placement: pmod(xxhash64(doc_id), n_doc_shards)."""
-    return F.pmod(F.xxhash64("doc_id"), F.lit(int(n_doc_shards))).cast("int")
 
 
 def _id_sets_df(rows: DataFrame, keys: tuple[str, ...], col: str) -> DataFrame:
@@ -91,7 +87,7 @@ def _dead_sets_df(tomb_df: DataFrame, seqs, n_doc_shards: int) -> DataFrame:
     for seq in seqs:
         pp = tomb_df.filter(F.col("before_seq") > F.lit(int(seq))).select(
             F.lit(int(seq)).alias("unit"),
-            _doc_shard(n_doc_shards).alias("shard"),
+            doc_shard(n_doc_shards).alias("shard"),
             "doc_id",
         )
         parts = pp if parts is None else parts.unionByName(pp)
@@ -187,7 +183,7 @@ class _UnitServer:
         if mode not in ("allow", "deny"):
             raise ValueError(f"mode must be 'allow' or 'deny', got {mode!r}")
         rows = _id_sets_df(
-            ids.select(_doc_shard(self._n_doc_shards).alias("shard"), "doc_id"),
+            ids.select(doc_shard(self._n_doc_shards).alias("shard"), "doc_id"),
             ("shard",),
             "ids",
         ).collect()

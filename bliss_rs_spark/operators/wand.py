@@ -35,13 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
+from bliss_rs_spark.functions.placement import doc_shard
 from bliss_rs_spark.operators.bm25 import query_terms
-from bliss_rs_spark.operators.unit_server import (
-    _dead_sets_df,
-    _doc_shard,
-    _id_sets_df,
-    _UnitServer,
-)
+from bliss_rs_spark.operators.unit_server import _dead_sets_df, _id_sets_df, _UnitServer
 
 
 @functools.lru_cache(maxsize=64)
@@ -505,7 +501,7 @@ def _allow_sets_df(
     for seq, _, _ in units:
         pp = allow_df.select(
             F.lit(int(seq)).alias("unit"),
-            _doc_shard(n_doc_shards).alias("shard"),
+            doc_shard(n_doc_shards).alias("shard"),
             "doc_id",
         )
         parts = pp if parts is None else parts.unionByName(pp)
@@ -578,6 +574,76 @@ def _meta_arrays(
     return ids, dead, allow
 
 
+def _per_unit_shard(
+    spark: SparkSession,
+    units: list[tuple[int, DataFrame, DataFrame | None]],
+    terms: list[str],
+    tombstones: dict[int, int] | DataFrame | None,
+    allowed: DataFrame | None,
+    n_doc_shards: int,
+    run,
+    schema: str,
+) -> DataFrame:
+    """The units setup shared by wand_topk_units and wand_topk_batch: union
+    the units' packed rows (pruned to ``terms``) and doc maps, build the
+    per-(unit, shard) meta side from the doc maps, dead sets and allow sets,
+    and run ``run(pdf, ids, dead, allow) -> pd.DataFrame`` once per
+    (unit, shard) group.  ``ids``/``dead``/``allow`` are None when no meta
+    row applies; a mapped unit missing its doc map, or a shard with nothing
+    allowed under an active filter, yields no rows."""
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def empty() -> pd.DataFrame:
+        return pd.DataFrame({c: [] for c in cols})
+
+    packed_u = None
+    map_u = None
+    for seq, packed, doc_map in units:
+        p = packed.withColumn("unit", F.lit(int(seq)))
+        packed_u = p if packed_u is None else packed_u.unionByName(p)
+        if doc_map is not None:
+            m = doc_map.withColumn("unit", F.lit(int(seq)))
+            map_u = m if map_u is None else map_u.unionByName(m)
+    pruned = packed_u.filter(F.col("term").isin(terms))
+    tomb_df = _as_tombstone_df(spark, tombstones)
+    dead_df = (
+        _dead_sets_df(tomb_df, [u[0] for u in units], n_doc_shards)
+        if tomb_df is not None
+        else None
+    )
+    allow_df = (
+        _allow_sets_df(allowed, units, n_doc_shards) if allowed is not None else None
+    )
+    meta = _shard_meta_df(map_u, dead_df, allow_df)
+
+    if meta is None:
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            return empty() if len(pdf) == 0 else run(pdf, None, None, None)
+
+        return pruned.groupBy("unit", "shard").applyInPandas(fn, schema)
+
+    allow_active = allowed is not None
+    mapped_units = frozenset(seq for seq, _, dm in units if dm is not None)
+
+    def fn_meta(key, pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) == 0:
+            return empty()
+        dec = _meta_arrays(meta_pdf, int(key[0]) in mapped_units)
+        if dec is None:
+            return empty()
+        ids, dead, allow = dec
+        if allow_active and (allow is None or not len(allow)):
+            # filter active but nothing in this shard matches it
+            return empty()
+        return run(pdf, ids, dead, allow)
+
+    return (
+        pruned.groupBy("unit", "shard")
+        .cogroup(meta.groupBy("unit", "shard"))
+        .applyInPandas(fn_meta, schema)
+    )
+
+
 def wand_topk_units(
     spark: SparkSession,
     units: list[tuple[int, DataFrame, DataFrame | None]],
@@ -624,32 +690,7 @@ def wand_topk_units(
 
     k1, b, kk = cfg.k1, cfg.b, k
 
-    packed_u = None
-    map_u = None
-    for seq, packed, doc_map in units:
-        p = packed.withColumn("unit", F.lit(int(seq)))
-        packed_u = p if packed_u is None else packed_u.unionByName(p)
-        if doc_map is not None:
-            m = doc_map.withColumn("unit", F.lit(int(seq)))
-            map_u = m if map_u is None else map_u.unionByName(m)
-
-    pruned = packed_u.filter(F.col("term").isin(list(idfs)))
-    tomb_df = _as_tombstone_df(spark, tombstones)
-    dead_df = (
-        _dead_sets_df(tomb_df, [u[0] for u in units], cfg.n_doc_shards)
-        if tomb_df is not None
-        else None
-    )
-    allow_df = (
-        _allow_sets_df(allowed, units, cfg.n_doc_shards)
-        if allowed is not None
-        else None
-    )
-    allow_active = allowed is not None
-    meta = _shard_meta_df(map_u, dead_df, allow_df)
-    mapped_units = frozenset(seq for seq, _, dm in units if dm is not None)
-
-    def run(pdf: pd.DataFrame, ids, dead, allow=None):
+    def run(pdf: pd.DataFrame, ids, dead, allow) -> pd.DataFrame:
         rows = []
         for term in sorted(pdf["term"]):
             sub = pdf[pdf["term"] == term]
@@ -657,42 +698,14 @@ def wand_topk_units(
         top = _wand_shard(rows, kk, k1, b, avgdl, dead=dead, allow=allow)
         if ids is not None:
             top = [(int(ids[d]), s) for d, s in top]
-        return top
-
-    if meta is None:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            top = run(pdf, None, None)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-            )
-
-        per = pruned.groupBy("unit", "shard").applyInPandas(
-            fn, "doc_id long, score double"
-        )
-    else:
-        def fn2(key, pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            dec = _meta_arrays(meta_pdf, int(key[0]) in mapped_units)
-            if dec is None:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            ids, dead, allow = dec
-            if allow_active and (allow is None or not len(allow)):
-                # filter active but nothing in this shard matches it
-                return pd.DataFrame({"doc_id": [], "score": []})
-            top = run(pdf, ids, dead, allow)
-            return pd.DataFrame(
-                {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-            )
-
-        per = (
-            pruned.groupBy("unit", "shard")
-            .cogroup(meta.groupBy("unit", "shard"))
-            .applyInPandas(fn2, "doc_id long, score double")
+        return pd.DataFrame(
+            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
         )
 
+    per = _per_unit_shard(
+        spark, units, list(idfs), tombstones, allowed, cfg.n_doc_shards,
+        run, "doc_id long, score double",
+    )
     return per.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -1053,7 +1066,7 @@ def wand_topk_batch(
     idfs = {r["term"]: float(r["idf"]) for r in idf_rows}
     k1, b = cfg.k1, cfg.b
 
-    def run_all(pdf: pd.DataFrame, ids, dead, allow=None) -> pd.DataFrame:
+    def run_all(pdf: pd.DataFrame, ids, dead, allow) -> pd.DataFrame:
         by_term = {t: list(sub["blocks"].iloc[0]) for t, sub in pdf.groupby("term")}
         out = {"query_id": [], "doc_id": [], "score": []}
         for qid, terms in qterms.items():
@@ -1072,57 +1085,10 @@ def wand_topk_batch(
                 out["score"].append(score)
         return pd.DataFrame(out)
 
-    packed_u = None
-    map_u = None
-    for seq, p, dm in units:
-        pp = p.withColumn("unit", F.lit(int(seq)))
-        packed_u = pp if packed_u is None else packed_u.unionByName(pp)
-        if dm is not None:
-            mm = dm.withColumn("unit", F.lit(int(seq)))
-            map_u = mm if map_u is None else map_u.unionByName(mm)
-
-    pruned = packed_u.filter(F.col("term").isin([t for t in union_terms if t in idfs]))
-    tomb_df = _as_tombstone_df(spark, tombstones)
-    dead_df = (
-        _dead_sets_df(tomb_df, [u[0] for u in units], cfg.n_doc_shards)
-        if tomb_df is not None
-        else None
+    per_shard = _per_unit_shard(
+        spark, units, [t for t in union_terms if t in idfs], tombstones, allowed,
+        cfg.n_doc_shards, run_all, "query_id int, doc_id long, score double",
     )
-    allow_df = (
-        _allow_sets_df(allowed, units, cfg.n_doc_shards)
-        if allowed is not None
-        else None
-    )
-    allow_active = allowed is not None
-    meta = _shard_meta_df(map_u, dead_df, allow_df)
-    mapped_units = frozenset(seq for seq, _, dm in units if dm is not None)
-
-    if meta is None:
-        def fn0(pdf):
-            if len(pdf) == 0:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-            return run_all(pdf, None, None)
-
-        per_shard = pruned.groupBy("unit", "shard").applyInPandas(
-            fn0, "query_id int, doc_id long, score double"
-        )
-    else:
-        def fn(key, pdf, meta_pdf):
-            if len(pdf) == 0:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-            dec = _meta_arrays(meta_pdf, int(key[0]) in mapped_units)
-            if dec is None:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-            ids, dead, allow = dec
-            if allow_active and (allow is None or not len(allow)):
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-            return run_all(pdf, ids, dead, allow)
-
-        per_shard = (
-            pruned.groupBy("unit", "shard")
-            .cogroup(meta.groupBy("unit", "shard"))
-            .applyInPandas(fn, "query_id int, doc_id long, score double")
-        )
 
     kdf = spark.createDataFrame(list(kmap.items()), "query_id int, k int")
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.corpus import with_invariants
+from bliss_rs_spark.functions.placement import doc_shard, hash_bucket
 from bliss_rs_spark.operators.build_index import (
     build_doc_stats,
     build_postings,
@@ -49,14 +50,6 @@ from bliss_rs_spark.operators.pack import (
     unpack_postings,
 )
 from bliss_rs_spark.sources.index_store import IndexStore, _run_parallel
-
-
-
-def _skew_ratio(df: DataFrame, key: str, weight: str | None = None) -> float:
-    """max/mean rows (or summed weight) per key — the per-shuffle-stage skew
-    metric.  Callers pass an already-aggregated frame (term_stats, packed)
-    so this never re-scans the postings; it is a job over vocab-sized data."""
-    return _bucket_weight_stats(df, key, weight)[1]
 
 
 def _bucket_weight_stats(
@@ -570,7 +563,7 @@ def update_index(
     if repack == "merge" and len(units) > 1:
         repack = "segment"  # outstanding segment units: see docstring
 
-    shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int")
+    shard_col = doc_shard(cfg.n_doc_shards)
     base_seq_old = int(meta.get("packed_base_seq", 0))
     old_doc_map = store.load(spark, "doc_map") if cfg.ordinal_docids else None
     to_unpersist = []
@@ -705,7 +698,7 @@ def update_index(
     # groupBy + a single full join against old_ts (was: two chained full
     # joins — one more exchange round per update for identical arithmetic;
     # guide §2.4 remove shuffles outright)
-    bucket_of_term = F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int")
+    bucket_of_term = hash_bucket("term", cfg.n_term_buckets)
     delta_rows = removed_flat.select(
         "term", bucket_of_term.alias("term_bucket"), F.lit(-1).alias("d")
     )
@@ -932,7 +925,7 @@ def compact_packs(spark: SparkSession, store: IndexStore) -> str:
     packed = build_packed_index(repack_input, term_stats, n_docs, avgdl, cfg)
     doc_map_out = None
     if cfg.ordinal_docids:
-        shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(cfg.n_doc_shards)).cast("int")
+        shard_col = doc_shard(cfg.n_doc_shards)
         doc_map_out = build_doc_map(repack_input.withColumn("shard", shard_col))
         packed = ordinalize_packed(packed, doc_map_out)
 

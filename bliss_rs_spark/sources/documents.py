@@ -38,25 +38,3 @@ def _validate(df: DataFrame) -> DataFrame:
             f"documents source missing columns {missing}; need {REQUIRED}"
         )
     return df.select(*REQUIRED, *[c for c in df.columns if c not in REQUIRED])
-
-
-def with_row_invariants(df: DataFrame) -> DataFrame:
-    """doc_id + content_sha256 (see corpus.with_invariants; re-exported here
-    so job code needs only the sources module)."""
-    from bliss_rs_spark.corpus import with_invariants
-
-    return with_invariants(df)
-
-
-def write_documents(df: DataFrame, dest: str, fmt: str = "parquet") -> None:
-    if fmt == "iceberg":
-        df.writeTo(dest).createOrReplace()
-        return
-    df.write.mode("overwrite").parquet(dest)
-
-
-def events_stream(spark: SparkSession, path: str):
-    """File-source stream over an events-shaped directory (ST parity)."""
-    return spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double"
-    ).parquet(path)

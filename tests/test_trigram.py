@@ -367,3 +367,28 @@ def test_substring_search_batch_folded_layout(docs, spark):
     )
     assert got == want and got
     folded.unpersist()
+
+
+def test_jvm_fold_concurrent_threads(spark, monkeypatch):
+    """Driver threads folding overlapping needles through a memo small
+    enough to evict constantly: no KeyError, and every thread sees the
+    single-threaded folds."""
+    from collections import OrderedDict
+    from concurrent.futures import ThreadPoolExecutor
+
+    from bliss_rs_spark.operators import trigram
+
+    values = ["İstanbul", "HelloWorld", "ΣΊΣΥΦΟΣ", "ǅungla", "STRASSE", "MiXeD"]
+    want = {v: trigram.jvm_fold(spark, v) for v in values}
+    monkeypatch.setattr(trigram, "_FOLD_MEMO", OrderedDict())
+    monkeypatch.setattr(trigram, "_FOLD_MEMO_MAX", 2)
+
+    def fold_all(t):
+        seq = [values[(t + i) % len(values)] for i in range(10)]
+        return [(v, trigram.jvm_fold(spark, v)) for v in seq]
+
+    with ThreadPoolExecutor(4) as pool:
+        results = [r for rs in pool.map(fold_all, range(4)) for r in rs]
+    assert len(results) == 40
+    assert all(got == want[v] for v, got in results)
+    assert len(trigram._FOLD_MEMO) <= 2

@@ -11,6 +11,7 @@
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
@@ -150,3 +151,30 @@ def test_noop_refresh_and_close(spark, churned, mode):
     assert _persisted_rdds(spark) == before
     assert getattr(srv, "_filters", {}) == {}
     assert sorted(map(id, released)) == sorted(map(id, bcs))
+
+
+def test_trigram_server_keeps_callers_cache(spark, churned):
+    """A docs frame the caller cached stays cached after the server that
+    used it closes (Spark keys caches by plan, so unpersisting the
+    server's handle would drop the caller's cache), also after
+    refresh(docs=...) re-points to it; a frame the server persisted
+    itself is released."""
+    store, docs = churned
+    mine = docs.filter(F.col("doc_id") % 2 == 0).cache()
+    mine.count()
+    try:
+        before = _persisted_rdds(spark)
+        srv = TrigramServer(
+            spark, build_trigram_index(mine, lowercase=True), mine,
+            n_doc_shards=4, index_lowercased=True,
+        )
+        srv.close()
+        assert mine.storageLevel != StorageLevel.NONE
+        assert _persisted_rdds(spark) == before
+        srv = TrigramServer.from_store(spark, store, docs)
+        srv.refresh(store, docs=mine)
+        srv.close()
+        assert mine.storageLevel != StorageLevel.NONE
+        assert _persisted_rdds(spark) == before
+    finally:
+        mine.unpersist()
