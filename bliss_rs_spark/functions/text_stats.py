@@ -2,8 +2,8 @@
 quality scoring, language ID, document fingerprinting.
 
 Everything here that sits on the query's hot path is a pure JVM column
-expression (whole-stage codegen; no Python).  Each expression has an exact
-DuckDB mirror so the driver oracle can replay it.  The reference's analogue
+expression (whole-stage codegen; no Python).  Each expression the driver
+oracle replays has an exact DuckDB mirror.  The reference's analogue
 is its descriptor set — fixed, versioned per-row statistics
 (/root/reference/src/song/mod.rs:102-156) computed by pure functions of the
 canonical input.
@@ -147,18 +147,6 @@ def shingles_spark(col: str = "content", n: int = 3) -> str:
     )
 
 
-def shingles_duckdb(col: str = "text", n: int = 3) -> str:
-    toks = tokenize_sql_duckdb(col)
-    parts = " || ' ' || ".join(f"__t[i + {j}]" for j in range(1, n + 1))
-    # DuckDB lists are 1-indexed; generate_series is inclusive.
-    return (
-        f"(select list_distinct(coalesce(list(sh), [])) from ("
-        f"select {parts} as sh from (select {toks} as __t) as __s, "
-        f"unnest(generate_series(0, len(__t) - {n})) as __g(i) "
-        f"where len(__t) >= {n}))"
-    )
-
-
 # --- document fingerprint ------------------------------------------------------
 
 def fingerprint_spark(col: str = "content") -> str:
@@ -167,11 +155,6 @@ def fingerprint_spark(col: str = "content") -> str:
     the cheap tier of near-dup detection."""
     toks = token_array_spark(col)
     return f"md5(concat_ws(' ', {toks}))"
-
-
-def fingerprint_duckdb(col: str = "text") -> str:
-    toks = tokenize_sql_duckdb(col)
-    return f"md5(array_to_string({toks}, ' '))"
 
 
 # --- language ID (stopword-profile heuristic) ---------------------------------

@@ -14,38 +14,49 @@ Grammar (Lucene-flavored, whitespace-tokenized):
     field:val   metadata equality filter on doc_stats (-field:val negates)
 
 Scoring: BM25 sum over the DISTINCT union of all scored terms (must +
-should + expansions) — expansion overlap never double-counts (a per-term
-"scorer" row is chosen inside the tiny query relation).  Negated terms and
-phrases constrain only.  Corpus stats are global (filter semantics).
+should + expansions): the query relation holds one row per term, so
+expansion overlap never double-counts.  Negated terms and phrases
+constrain only.  Corpus stats are global (filter semantics).
 
-Physical shape (one scan, two tiny broadcasts, one aggregation):
+Physical shape (no driver round-trip; building the plan runs no job):
 
-    query relation  = driver terms ∪ DISTRIBUTED vocab expansions
-                      (term, group_id, is_must, is_neg, scorer)  — tiny
-    postings scan   pruned to the relation's buckets, joined broadcast
-    one groupBy doc — score (scorer rows), must-group count (conditional
-                      countDistinct), neg flag (conditional max): MUST /
-                      MUST_NOT / SHOULD all inside a single aggregation
+    query relation  = ONE term_stats scan filtered to the query's terms
+                      (pushed term IN (...) for literal terms, vocab
+                      predicates for prefix/suffix/fuzzy groups), one row
+                      per term: (term, idf, scored, neg, must masks) — tiny
+    postings scan   literal-only: pruned on the driver to the terms'
+                      buckets (placement.buckets_of) with term IN (...)
+                      pushed; with expansions: joined on (term_bucket,
+                      term) so dynamic partition pruning prunes the dirs
+    one groupBy doc — score (sum over scored rows), must test (bit_or of
+                      the must-group masks equals all ones), neg flag
+                      (bool_or): MUST / MUST_NOT / SHOULD in one
+                      aggregation, one shuffle
     then: metadata semi/anti joins (filters), phrase semi/anti joins
     (phrase_match over the positional frame), global top-k.
 
-At 10^12 docs nothing here is new risk: the expansions stay distributed
-(operators/query_ops.py), the aggregation is partial+final, phrase
-constraints reuse the positional kernel, and the only driver-side values
-are the parsed query itself and the bounded bucket list.
+At 10^12 docs nothing here is new risk: expansions stay distributed (or
+come from the indexed tables of operators/query_ops.py), the aggregation is
+partial+final, phrase constraints reuse the positional kernel, and the only
+driver-side values are the parsed query itself and its literal terms.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bliss_rs_spark.config import IndexConfig
-from bliss_rs_spark.functions.placement import hash_bucket
+from bliss_rs_spark.functions.placement import buckets_of, hash_bucket
 from bliss_rs_spark.operators.bm25 import bm25_score_col, query_terms
+from bliss_rs_spark.operators.query_ops import (
+    expand_fuzzy_indexed,
+    expand_suffix_indexed,
+)
 
 __all__ = ["QuerySpec", "parse_query", "search"]
 
@@ -99,117 +110,109 @@ def parse_query(q: str) -> QuerySpec:
     return spec
 
 
+_MASK_BITS = 63  # must groups per bit_or mask column (sign bit unused)
+
+
+@dataclass
+class _Relation:
+    """The query relation and what the postings side needs to join it."""
+
+    frame: DataFrame  # (term, idf, scored, neg, m0..): one row per term
+    literals: list[str] | None  # every term, when no group is an expansion
+    masks: list[int]  # per mask column: the value meaning "all must groups"
+
+
 def _query_relation(
-    spark: SparkSession,
     term_stats: DataFrame,
     spec: QuerySpec,
     cfg: IndexConfig,
     lang: str | None,
     reversed_terms: DataFrame | None = None,
     variants: DataFrame | None = None,
-) -> tuple[DataFrame | None, int]:
-    """-> ((term, group_id, is_must, is_neg, scorer) relation, n_must_groups).
+) -> _Relation | None:
+    """One row per vocabulary term the query touches, with its flags.
 
-    Driver terms become literal rows; prefix/fuzzy groups are vocabulary
-    filters (DISTRIBUTED — the vocab never reaches the driver).  ``scorer``
-    marks exactly one non-negated row per term so expansion overlap cannot
-    double-score.  When the INDEXED expansion tables are supplied
-    (``reversed_terms`` / ``variants``, query_ops.py:build_reversed_terms /
-    build_deletion_variants), suffix and fuzzy groups come from pushed
-    prefix / isin scans over them instead of the per-query vocab pass —
-    expansion-identical (tested), storage-side-only swap."""
-    parts: list[DataFrame] = []
-    gid = 0
-    n_must = 0
-    lit_rows: list[tuple[str, int, bool, bool]] = []
+    Every group (a literal MUST sub-term, a literal SHOULD/MUST_NOT token,
+    a prefix, suffix or fuzzy expansion) is a predicate over term_stats'
+    ``term``, so the relation is one filtered vocab scan and its flags are
+    plain expressions: ``scored`` (in some non-negated group), ``neg`` (in
+    some MUST_NOT group) and the must masks (bit i of mask column i // 63
+    set for membership in must group i).  Expansions stay DISTRIBUTED, the
+    vocab never reaches the driver.  When the INDEXED expansion tables are
+    supplied (``reversed_terms`` / ``variants``, query_ops.py:
+    build_reversed_terms / build_deletion_variants), suffix and fuzzy groups
+    come from pushed prefix / isin scans over them, left-joined onto the
+    vocab as membership flags — expansion-identical (tested)."""
+    term = F.col("term")
+    groups: list[tuple[str, F.Column | DataFrame]] = []  # (op, membership)
+    literals: list[str] = []
     for op, tok in spec.terms:
         subs = query_terms(tok, lang, cfg)
-        if not subs:
-            continue
+        literals += subs
         if op == "+":
             # +fooBar analyzes to [foo, bar]: EACH sub-term is required
-            for t in subs:
-                lit_rows.append((t, gid, True, False))
-                gid += 1
-                n_must += 1
-        else:
-            for t in subs:
-                lit_rows.append((t, gid, False, op == "-"))
-            gid += 1
-    if lit_rows:
-        parts.append(
-            spark.createDataFrame(
-                lit_rows, "term string, group_id int, is_must boolean, is_neg boolean"
-            )
-        )
-
-    def expansion_group(expanded: DataFrame, op: str) -> DataFrame:
-        return expanded.select(
-            "term",
-            F.lit(gid).alias("group_id"),
-            F.lit(op == "+").alias("is_must"),
-            F.lit(op == "-").alias("is_neg"),
-        )
-
-    def vocab_group(flt: F.Column, op: str) -> DataFrame:
-        return expansion_group(term_stats.filter(flt).select("term"), op)
-
-    for op, prefix in spec.prefixes:
-        parts.append(vocab_group(F.col("term").startswith(prefix), op))
-        if op == "+":
-            n_must += 1
-        gid += 1
+            groups += [(op, term == t) for t in subs]
+        elif subs:
+            groups.append((op, term.isin(subs)))
+    expansions: list[tuple[str, F.Column | DataFrame]] = [
+        (op, term.startswith(prefix)) for op, prefix in spec.prefixes
+    ]
     for op, suffix in spec.suffixes:
-        if reversed_terms is not None:
-            from bliss_rs_spark.operators.query_ops import expand_suffix_indexed
-
-            parts.append(
-                expansion_group(
-                    expand_suffix_indexed(reversed_terms, suffix).select("term"), op
-                )
-            )
-        else:
-            parts.append(vocab_group(F.col("term").endswith(suffix), op))
-        if op == "+":
-            n_must += 1
-        gid += 1
+        expansions.append((op, (
+            expand_suffix_indexed(reversed_terms, suffix)
+            if reversed_terms is not None else term.endswith(suffix)
+        )))
     for op, t, dist in spec.fuzzies:
-        if variants is not None:
-            from bliss_rs_spark.operators.query_ops import expand_fuzzy_indexed
+        expansions.append((op, (
+            expand_fuzzy_indexed(variants, t, dist)
+            if variants is not None
+            else F.levenshtein(term, F.lit(t)) <= F.lit(dist)
+        )))
+    if not groups and not expansions:
+        return None
 
-            parts.append(
-                expansion_group(
-                    expand_fuzzy_indexed(variants, t, dist).select("term"), op
-                )
+    vocab = term_stats.select("term", "idf")
+    for i, (op, member) in enumerate(expansions):
+        if isinstance(member, DataFrame):
+            flag = f"_in{i}"
+            vocab = vocab.join(
+                F.broadcast(member.select("term", F.lit(True).alias(flag))),
+                "term",
+                "left",
             )
-        else:
-            parts.append(
-                vocab_group(F.levenshtein(F.col("term"), F.lit(t)) <= F.lit(dist), op)
-            )
-        if op == "+":
-            n_must += 1
-        gid += 1
-    if not parts:
-        return None, None, n_must
-    rel = parts[0]
-    for p in parts[1:]:
-        rel = rel.unionByName(p)
-    from pyspark.sql import Window as W
+            expansions[i] = (op, F.col(flag).isNotNull())
+    groups += expansions
 
-    scorer_rn = F.row_number().over(
-        W.partitionBy("term").orderBy(
-            F.col("is_neg").cast("int"), F.col("group_id")
-        )
+    def any_of(conds: list[F.Column]) -> F.Column:
+        return reduce(lambda a, b: a | b, conds, F.lit(False))
+
+    must = [c for op, c in groups if op == "+"]
+    chunks = [must[j : j + _MASK_BITS] for j in range(0, len(must), _MASK_BITS)]
+    mask_cols = [
+        reduce(
+            lambda a, b: a.bitwiseOR(b),
+            [
+                F.when(c, F.lit(1 << bit)).otherwise(F.lit(0)).cast("long")
+                for bit, c in enumerate(chunk)
+            ],
+        ).alias(f"m{j}")
+        for j, chunk in enumerate(chunks)
+    ]
+    member = [c for _, c in expansions]
+    if literals:
+        member.append(term.isin(literals))  # pushed into the vocab scan
+    frame = vocab.filter(any_of(member)).select(
+        "term",
+        "idf",
+        any_of([c for op, c in groups if op != "-"]).alias("scored"),
+        any_of([c for op, c in groups if op == "-"]).alias("neg"),
+        *mask_cols,
     )
-    # (windowed relation, bare pre-window term set) — the term set feeds the
-    # bucket-pruning probe, which does not need the scorer window's shuffle
-    # or the idf join (guide §1.2: it is a strict subplan of the probe that
-    # previously ran)
-    return (
-        rel.withColumn("rn", scorer_rn)
-        .withColumn("scorer", (F.col("rn") == 1) & ~F.col("is_neg"))
-        .drop("rn")
-    ), rel.select("term"), n_must
+    return _Relation(
+        frame=frame,
+        literals=None if expansions else sorted(set(literals)),
+        masks=[(1 << len(chunk)) - 1 for chunk in chunks],
+    )
 
 
 # doc_stats metadata columns a field filter can target when no doc_stats
@@ -262,42 +265,39 @@ def search(
     if spec.phrases and positional is None:
         raise ValueError("query has phrases; pass the positional frame")
 
-    rel, rel_terms, n_must = _query_relation(
-        spark, term_stats, spec, cfg, lang, reversed_terms, variants
-    )
+    rel = _query_relation(term_stats, spec, cfg, lang, reversed_terms, variants)
     if rel is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    rel = rel.join(term_stats.select("term", "idf"), "term").select(
-        "term", "group_id", "is_must", "is_neg", "scorer", "idf"
-    )
-
-    # bounded driver round-trip: bucket list for partition pruning (probed
-    # over the pre-window term set — no scorer window, no idf join)
-    buckets = sorted(
-        r["b"]
-        for r in rel_terms.select(
-            hash_bucket("term", cfg.n_term_buckets).alias("b")
+        return spark.range(0).select(
+            F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
         )
-        .distinct()
-        .collect()
-    )
-    if not buckets:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    joined = postings.filter(F.col("term_bucket").isin(buckets)).join(
-        F.broadcast(rel), "term"
-    )
+    if rel.literals is not None:
+        # literal terms only: prune on the driver, as bm25_topk does — the
+        # bucket IN (...) prunes partition dirs, term IN (...) row groups
+        joined = postings.filter(
+            F.col("term_bucket").isin(buckets_of(rel.literals, cfg.n_term_buckets))
+            & F.col("term").isin(rel.literals)
+        ).join(F.broadcast(rel.frame), "term")
+    else:
+        # expansion terms are only known at run time: joining on the bucket
+        # too lets dynamic partition pruning skip the postings dirs
+        joined = postings.join(
+            F.broadcast(
+                rel.frame.withColumn(
+                    "term_bucket", hash_bucket("term", cfg.n_term_buckets)
+                )
+            ),
+            ["term_bucket", "term"],
+        )
     partial = bm25_score_col(cfg, avgdl)
     agg = joined.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("scorer"), partial).otherwise(F.lit(0.0))).alias("score"),
-        F.countDistinct(
-            F.when(F.col("is_must") & ~F.col("is_neg"), F.col("group_id"))
-        ).alias("must_hits"),
-        F.max(F.when(F.col("is_neg"), F.lit(1)).otherwise(F.lit(0))).alias("neg"),
+        F.sum(F.when(F.col("scored"), partial).otherwise(F.lit(0.0))).alias("score"),
+        F.bool_or("neg").alias("neg"),
+        *[F.bit_or(f"m{j}").alias(f"m{j}") for j in range(len(rel.masks))],
     )
-    hits = agg.filter(
-        (F.col("must_hits") == F.lit(n_must)) & (F.col("neg") == 0)
-    ).select("doc_id", "score")
+    keep = ~F.col("neg")
+    for j, full in enumerate(rel.masks):
+        keep = keep & (F.col(f"m{j}") == F.lit(full))
+    hits = agg.filter(keep).select("doc_id", "score")
 
     for op, fld, val in spec.filters:
         sel = doc_stats.filter(F.col(fld) == F.lit(val)).select("doc_id")

@@ -49,7 +49,7 @@ from bliss_rs_spark.operators.pack import (
     ordinalize_packed,
     unpack_postings,
 )
-from bliss_rs_spark.sources.index_store import IndexStore, _run_parallel
+from bliss_rs_spark.sources.index_store import IndexStore, _run_parallel, read_parquet
 
 
 def _bucket_weight_stats(
@@ -237,7 +237,7 @@ def _write_segment_from_tokenized(
 def _read_segment(spark: SparkSession, store: IndexStore, seg: str, frame: str) -> DataFrame:
     import os
 
-    return spark.read.parquet(os.path.join(store.segments_dir, seg, frame))
+    return read_parquet(spark, os.path.join(store.segments_dir, seg, frame))
 
 
 def _assemble_and_commit(
@@ -1283,22 +1283,6 @@ def substring_query_lines(
     )
 
 
-def substring_query_batch(
-    spark: SparkSession,
-    store: IndexStore,
-    docs: DataFrame,
-    needles: list[tuple[int, str]],
-) -> DataFrame:
-    """A whole grep needle SET from the CURRENT snapshot in ONE index scan
-    -> (needle_id, doc_id) — the grep sibling of query_index_batch
-    (operators/trigram.py:substring_search_batch; store layout is folded)."""
-    from bliss_rs_spark.operators.trigram import substring_search_batch
-
-    return substring_search_batch(
-        docs, _store_trigram(spark, store), needles, index_lowercased=True
-    )
-
-
 def regex_query(
     spark: SparkSession, store: IndexStore, docs: DataFrame, pattern: str
 ) -> DataFrame:
@@ -1434,9 +1418,9 @@ def load_expansion_tables(
     rt = dv = None
     dist = 0
     if need_suffix and os.path.isdir(os.path.join(d, "reversed_terms")):
-        rt = spark.read.parquet(os.path.join(d, "reversed_terms"))
+        rt = read_parquet(spark, os.path.join(d, "reversed_terms"))
     if need_fuzzy and os.path.isdir(os.path.join(d, "deletion_variants")):
-        dv = spark.read.parquet(os.path.join(d, "deletion_variants"))
+        dv = read_parquet(spark, os.path.join(d, "deletion_variants"))
         try:
             with open(os.path.join(d, "expansions.json")) as fh:
                 dist = int(_json.load(fh).get("fuzzy_max_dist", 0))

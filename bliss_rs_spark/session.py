@@ -89,6 +89,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # a store frame fans out to at most a few hundred k=v dirs (term
+        # and gram buckets, doc shards); past 32 paths Spark lists them in
+        # a scheduled job per read, where the driver lists them in ms
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -55,6 +55,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from bliss_rs_spark.config import IndexConfig
 
@@ -132,6 +133,61 @@ def _ensure_schema_file(df: DataFrame, out: str) -> None:
     df.sparkSession.createDataFrame([], df.schema).repartition(1).write.mode(
         "overwrite"
     ).parquet(out)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """Read schema of the parquet dir ``path``, taken the way Spark's own
+    ``mergeSchema=false`` inference takes it (one footer) but on the driver
+    with pyarrow, so no Spark job runs: the Spark schema every Spark writer
+    stores in the footer's key-value metadata, nullable like every file
+    source read, then one int column per ``k=v`` partition directory on the
+    way to that file.  None when the dir has no data file, the file was
+    not written by Spark, or a partition value is not an int; the caller
+    then lets Spark infer."""
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
+        return None
+    for root, dirs, files in os.walk(path):
+        # Spark skips _temporary/.staging dirs and files alike
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(
+            f for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        if data:
+            break
+    else:
+        return None
+    kv = pq.read_metadata(os.path.join(root, data[0])).metadata or {}
+    if _SPARK_SCHEMA_KEY not in kv:
+        return None
+    fields = [
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY])).fields
+    ]
+    for part in os.path.relpath(root, path).split(os.sep):
+        if part == ".":
+            continue
+        name, _, value = part.partition("=")
+        try:
+            if not name or not -(2**31) <= int(value) < 2**31:
+                return None
+        except ValueError:
+            return None
+        fields.append(StructField(name, IntegerType(), True))
+    return StructType(fields)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job, the
+    schema coming from _footer_schema: the store's frame reads go here."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -219,26 +275,31 @@ class IndexStore:
         are assembled as the union of the referenced segments with the
         tombstone filter applied: a row of segment seq s survives unless a
         tombstone (doc_id, before_seq) with s < before_seq covers it.  The
-        tombstone join is broadcast-size (churned docs, not corpus)."""
+        tombstone join is broadcast-size (churned docs, not corpus) and is
+        left out when the footers count no tombstone.  Every read takes its
+        schema from a footer (read_parquet), so building a frame runs no
+        Spark job."""
         assert frame in FRAMES, frame
         meta = self.meta()
-        if "segments" not in meta:  # layout-1 snapshot (pre-segment store)
-            return spark.read.parquet(os.path.join(self.snapshot_dir(), frame))
-        if frame in SNAPSHOT_FRAMES:
-            return spark.read.parquet(os.path.join(self.snapshot_dir(), frame))
+        if "segments" not in meta or frame in SNAPSHOT_FRAMES:
+            # snapshot frame, or any frame of a layout-1 (pre-segment) store
+            return read_parquet(spark, os.path.join(self.snapshot_dir(), frame))
+        dead = self.tombstone_rows() != 0  # None (no pyarrow): assume some
         parts = None
         for seg in meta["segments"]:
             p = os.path.join(self.segments_dir, seg, frame)
             if not os.path.isdir(p):
                 continue
-            df = spark.read.parquet(p).withColumn(
-                "_seg_seq", F.lit(self.seg_seq(seg))
-            )
+            df = read_parquet(spark, p)
+            if dead:
+                df = df.withColumn("_seg_seq", F.lit(self.seg_seq(seg)))
             parts = df if parts is None else parts.unionByName(df)
         if parts is None:
             raise FileNotFoundError(
                 f"frame {frame} exists in no referenced segment of {self.path}"
             )
+        if not dead:
+            return parts
         tomb = self.load(spark, "tombstones")
         return (
             parts.join(F.broadcast(tomb), "doc_id", "left")
@@ -339,26 +400,23 @@ class IndexStore:
         unit per referenced segment that carries its own pack.  Query side:
         operators/wand.py:wand_topk_units."""
         meta = self.meta()
-        if "segments" not in meta:
-            # layout-1 (pre-segment) snapshot: one unit, no segment packs, no
-            # tombstones frame — callers like WandServer.from_store and
-            # query_index_batch work unchanged on old stores.
-            dm_dir = os.path.join(self.snapshot_dir(), "doc_map")
-            return [(0, self.load(spark, "packed"),
-                     spark.read.parquet(dm_dir) if os.path.isdir(dm_dir) else None)]
+
+        def doc_map(d: str) -> DataFrame | None:
+            return read_parquet(spark, d) if os.path.isdir(d) else None
+
+        # a layout-1 (pre-segment) snapshot has neither packed_base_seq nor
+        # segments: one unit, so callers like WandServer.from_store and
+        # query_index_batch work unchanged on old stores
         base_seq = int(meta.get("packed_base_seq", 0))
         units = [(base_seq, self.load(spark, "packed"),
-                  self.load(spark, "doc_map")
-                  if os.path.isdir(os.path.join(self.snapshot_dir(), "doc_map"))
-                  else None)]
+                  doc_map(os.path.join(self.snapshot_dir(), "doc_map")))]
         for seg in meta.get("segments", []):
             p = os.path.join(self.segments_dir, seg, "packed")
             if self.seg_seq(seg) > base_seq and os.path.isdir(p):
-                dm = os.path.join(self.segments_dir, seg, "doc_map")
                 units.append((
                     self.seg_seq(seg),
-                    spark.read.parquet(p),
-                    spark.read.parquet(dm) if os.path.isdir(dm) else None,
+                    read_parquet(spark, p),
+                    doc_map(os.path.join(self.segments_dir, seg, "doc_map")),
                 ))
         return units
 
@@ -707,7 +765,7 @@ class IndexStore:
     def load_checkpoint(self, spark: SparkSession) -> DataFrame | None:
         if not self.has_checkpoint():
             return None
-        return spark.read.parquet(self.checkpoint_dir)
+        return read_parquet(spark, self.checkpoint_dir)
 
     def append_checkpoint(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.checkpoint_dir)

@@ -181,19 +181,16 @@ def test_empty_and_unknown(env):
     assert _hit_indexes(env, "zzz_unknown_term") == []
     assert _hit_indexes(env, "   ") == []
 
-def test_search_through_store_with_churn(spark, tmp_path):
-    """search_index: the unified grammar against a LIVE store after a
-    delete update — results exclude tombstoned docs and agree with the
-    independent boolean_topk + metadata-join composition over the same
-    store frames."""
+@pytest.fixture(scope="module")
+def churned(spark, tmp_path_factory):
+    """A positional store after a delete update: (source docs, store)."""
     from bliss_rs_spark.corpus import synth_documents, with_invariants
-    from bliss_rs_spark.operators.query_ops import boolean_topk
-    from bliss_rs_spark.plans.lifecycle import build_full, search_index, update_index
+    from bliss_rs_spark.plans.lifecycle import build_full, update_index
     from bliss_rs_spark.sources.index_store import IndexStore
 
     cfg = IndexConfig(store_positions=True)
     docs = with_invariants(synth_documents(spark, 120, seed=3)).cache()
-    store = IndexStore(str(tmp_path / "idx"))
+    store = IndexStore(str(tmp_path_factory.mktemp("churned") / "idx"))
     build_full(spark, docs, store, cfg, checkpoint=False)
     update_index(
         spark,
@@ -203,7 +200,19 @@ def test_search_through_store_with_churn(spark, tmp_path):
         delete_missing=True,
         repack="segment",
     )
+    return docs, store
 
+
+def test_search_through_store_with_churn(spark, churned, tmp_path):
+    """search_index: the unified grammar against a LIVE store after a
+    delete update — results exclude tombstoned docs and agree with the
+    independent boolean_topk + metadata-join composition over the same
+    store frames."""
+    from bliss_rs_spark.operators.query_ops import boolean_topk
+    from bliss_rs_spark.plans.lifecycle import build_full, search_index
+    from bliss_rs_spark.sources.index_store import IndexStore
+
+    docs, store = churned
     got = search_index(spark, store, "+posting -codec lang:rust", k=50).collect()
     assert got, "vacuous"
     live_rust = {
@@ -323,3 +332,169 @@ def test_indexed_expansions_identical_and_pushed(env, tmp_path):
     )
     assert "StartsWith(rterm" in plan, plan[:2000]
     dv.unpersist()
+
+
+def test_search_index_plan_runs_no_job_and_no_python(spark, churned):
+    """Building search_index runs no Spark job (no bucket probe, no schema
+    inference); the executed plan scans no Python RDD; a literal query
+    pushes term IN (...) into the postings and term_stats scans, and an
+    expansion query prunes postings dirs by dynamic partition pruning."""
+    import re
+    import uuid
+
+    from bliss_rs_spark.plans.lifecycle import search_index
+
+    _docs, store = churned
+    sc = spark.sparkContext
+    group = f"search-plan-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "search_index planning")
+    try:
+        literal = search_index(spark, store, "+posting block -codec", k=5)
+        prefix = search_index(spark, store, "pos* +block", k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    def scans(df):
+        assert df.collect(), "vacuous"
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        lines = [ln for ln in plan.splitlines() if "FileScan parquet [term#" in ln]
+        postings = [ln for ln in lines if re.search(r",tf#\d+", ln)]
+        term_stats = [ln for ln in lines if re.search(r",idf#\d+", ln)]
+        assert postings and term_stats, plan
+        return postings, term_stats
+
+    postings, term_stats = scans(literal)
+    for ln in postings + term_stats:
+        assert "PushedFilters: [In(term, [" in ln, ln
+    postings, _ = scans(prefix)
+    for ln in postings:
+        assert "dynamicpruningexpression(term_bucket" in ln, ln
+
+
+# --- grammar grid vs a pure-Python evaluator ----------------------------------
+
+def _levenshtein(a, b):
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _reference_search(q, postings, idf, avgdl):
+    """{doc_id: score} of the grammar over collected rows: a doc matches
+    when it holds a term of every MUST group and no MUST_NOT term; it
+    scores the BM25 partials of its terms that sit in some non-negated
+    group, each term once."""
+    from bliss_rs_spark.operators.bm25 import query_terms
+
+    spec = parse_query(q)
+    vocab = set(idf)
+    groups = []  # (op, set of terms)
+    for op, tok in spec.terms:
+        subs = query_terms(tok, None, CFG)
+        if op == "+":
+            groups += [(op, {t}) for t in subs]
+        elif subs:
+            groups.append((op, set(subs)))
+    groups += [(op, {t for t in vocab if t.startswith(p)}) for op, p in spec.prefixes]
+    groups += [(op, {t for t in vocab if t.endswith(s)}) for op, s in spec.suffixes]
+    groups += [
+        (op, {t for t in vocab if _levenshtein(t, w) <= d}) for op, w, d in spec.fuzzies
+    ]
+    scored = set().union(*[g for op, g in groups if op != "-"])
+    neg = set().union(*[g for op, g in groups if op == "-"])
+    must = [g for op, g in groups if op == "+"]
+    touched = scored | neg
+    k1, b = CFG.k1, CFG.b
+    docs = {}
+    for term, doc, tf, dl in postings:
+        if term in touched:
+            docs.setdefault(doc, []).append((term, tf, dl))
+    out = {}
+    for doc, rows in docs.items():
+        terms = {t for t, _, _ in rows}
+        if terms & neg or not all(terms & g for g in must):
+            continue
+        out[doc] = sum(
+            idf[t] * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
+            for t, tf, dl in rows
+            if t in scored
+        )
+    return out
+
+
+def _grammar_grid(vocab, seed=11, n=16):
+    """Seeded random grammar queries plus the fixed edge cases."""
+    import random
+
+    rng = random.Random(seed)
+    words = sorted(vocab)
+
+    def clause():
+        w = rng.choice(words)
+        op = rng.choice(["+", "-", "", ""])
+        kind = rng.choice(["term", "term", "prefix", "suffix", "fuzzy"])
+        if kind == "prefix":
+            return f"{op}{w[: rng.randint(2, 4)]}*"
+        if kind == "suffix":
+            return f"{op}*{w[-rng.randint(2, 3):]}"
+        if kind == "fuzzy":
+            i = rng.randrange(len(w))
+            return f"{op}{w[:i]}x{w[i + 1:]}~1"
+        return f"{op}{w}"
+
+    grid = [" ".join(clause() for _ in range(rng.randint(1, 4))) for _ in range(n)]
+    return grid + [
+        "+merge +zzz_missing_term join",  # must term absent from the vocab
+        "+table -table",  # +a -a
+        "merge merg* mer* +join",  # overlapping expansions
+        "tabl~1 table tables~2",  # fuzzy overlapping a literal
+        " ".join(["+merg*"] * 69) + " +table",  # 70 must groups, 2 masks
+        " ".join(["+merg*"] * 69) + " +vect*",  # the 70th group fails
+        " ".join(["+merge"] * 63) + " +sort -conflict",  # 64th decides
+    ]
+
+
+def test_grammar_grid_matches_reference(env):
+    """Every grid query's full answer (doc set and scores) equals the
+    pure-Python evaluator's over the same postings and idf."""
+    from functools import reduce
+
+    idx, _pos, _order = env
+    spark = idx.postings.sparkSession
+    postings = [
+        (r["term"], r["doc_id"], r["tf"], r["dl"])
+        for r in idx.postings.select("term", "doc_id", "tf", "dl").collect()
+    ]
+    idf = {r["term"]: r["idf"] for r in idx.term_stats.select("term", "idf").collect()}
+    grid = _grammar_grid(idf)
+    # one action for the whole grid: the answers, tagged by grid position
+    answers = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            search(
+                spark, idx.postings, idx.term_stats, idx.avgdl, q, k=len(TEXTS), cfg=CFG
+            ).withColumn("qi", F.lit(i))
+            for i, q in enumerate(grid)
+        ],
+    ).collect()
+    got = {i: {} for i in range(len(grid))}
+    for r in answers:
+        got[r["qi"]][r["doc_id"]] = r["score"]
+    nonempty = 0
+    for i, q in enumerate(grid):
+        want = _reference_search(q, postings, idf, idx.avgdl)
+        assert set(got[i]) == set(want), q
+        for d, score in want.items():
+            assert got[i][d] == pytest.approx(score, abs=1e-9), q
+        nonempty += bool(want)
+    assert nonempty >= len(grid) // 2, "vacuous grid"
+    for edge in ("+merge +zzz_missing_term join", "+table -table"):
+        assert got[grid.index(edge)] == {}
+    assert got[grid.index(" ".join(["+merg*"] * 69) + " +table")], "vacuous"
+    assert got[grid.index(" ".join(["+merge"] * 63) + " +sort -conflict")]
