@@ -17,6 +17,11 @@ docstrings point at the reference behavior each component mirrors.
 """
 
 from bliss_rs_spark.config import IndexConfig
+from bliss_rs_spark.session import keep_zip_directories
+
+# every Python worker that unpickles one of our kernels imports this package;
+# from its next task on, it stops re-reading pyspark.zip's directory per task
+keep_zip_directories()
 
 __version__ = "0.1.0"
 

@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.functions.placement import doc_shard, hash_bucket
@@ -41,6 +42,21 @@ _PACK_SCHEMA = (
     "shard int, term string, n_pos long, max_pos int, "
     "min_doc long, max_doc long, pblob binary"
 )
+
+# the query kernels' outputs; StructTypes, not DDL strings, which would
+# cost a JVM parse round trip on every query
+_DOC_ID = T.StructField("doc_id", T.LongType())
+_PHRASE_TF = T.StructField("phrase_tf", T.IntegerType())
+_TOPK_SCHEMA = T.StructType([_DOC_ID, _PHRASE_TF])
+_BATCH_SCHEMA = T.StructType(
+    [T.StructField("phrase_id", T.IntegerType()), _DOC_ID, _PHRASE_TF]
+)
+_WINDOW_COLS = ("doc_id", "min_window")
+_SPAN_COLS = _WINDOW_COLS + ("win_start", "win_end")
+_WINDOW_SCHEMAS = {
+    cols: T.StructType([T.StructField(c, T.LongType()) for c in cols])
+    for cols in (_WINDOW_COLS, _SPAN_COLS)
+}
 
 
 def encode_positional_blob(
@@ -622,18 +638,13 @@ def min_window_match(
     kernel the server uses, emitting every match.  One shuffle, bounded by
     the query terms' posting mass."""
     terms = sorted(set(tokenize_text(query_text)))
-    empty_schema = "doc_id long, min_window long"
-    if with_spans:
-        empty_schema += ", win_start long, win_end long"
+    cols = _SPAN_COLS if with_spans else _WINDOW_COLS
     if not terms:
-        return spark.createDataFrame([], empty_schema)
+        return spark.createDataFrame([], _WINDOW_SCHEMAS[cols])
     pruned = (
         positional.filter(F.col("term").isin(terms))
         .select("term", "doc_id", "positions")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    cols = ["doc_id", "min_window"] + (
-        ["win_start", "win_end"] if with_spans else []
     )
     empty = pd.DataFrame({c: pd.Series([], dtype="int64") for c in cols})
     big_k = 1 << 62
@@ -654,7 +665,7 @@ def min_window_match(
             return
         yield pd.DataFrame(dict(zip(cols, top)))
 
-    return pruned.mapInPandas(kernel, empty_schema)
+    return pruned.mapInPandas(kernel, _WINDOW_SCHEMAS[cols])
 
 
 def attach_snippet_text(
@@ -903,9 +914,7 @@ class PhraseServer(_UnitServer):
                 {"doc_id": ids, "phrase_tf": tfs.astype("int32")}
             )
 
-        return self._scan(uniq_terms).mapInPandas(
-            kernel, "doc_id long, phrase_tf int"
-        )
+        return self._scan(uniq_terms).mapInPandas(kernel, _TOPK_SCHEMA)
 
     def query(
         self, phrase: str, k: int = 10, filter_name: str | None = None
@@ -946,10 +955,7 @@ class PhraseServer(_UnitServer):
         has_stats = self._has_stats
         dead_bc = self._dead_bc
         allow_bc = self._filter(filter_name)
-        cols = ["doc_id", "min_window"] + (
-            ["win_start", "win_end"] if with_spans else []
-        )
-        schema = ", ".join(f"{c} long" for c in cols)
+        cols = _SPAN_COLS if with_spans else _WINDOW_COLS
         empty = pd.DataFrame({c: pd.Series([], dtype="int64") for c in cols})
 
         def kernel(batches):
@@ -980,7 +986,7 @@ class PhraseServer(_UnitServer):
                 return
             yield pd.DataFrame(dict(zip(cols, top)))
 
-        df = self._scan(terms).mapInPandas(kernel, schema)
+        df = self._scan(terms).mapInPandas(kernel, _WINDOW_SCHEMAS[cols])
         if not with_spans:
             merged = sorted(
                 ((int(r["min_window"]), int(r["doc_id"])) for r in df.collect())
@@ -1057,7 +1063,7 @@ class PhraseServer(_UnitServer):
 
         partials = (
             self._scan(union_terms)
-            .mapInPandas(kernel, "phrase_id int, doc_id long, phrase_tf int")
+            .mapInPandas(kernel, _BATCH_SCHEMA)
             .collect()
         )
         by_pid: dict[int, list[tuple[int, int]]] = {}

@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bliss_rs_spark.functions.placement import buckets_of, doc_shard, hash_bucket
 from bliss_rs_spark.operators.unit_server import _UnitServer
@@ -76,6 +77,14 @@ __all__ = [
 N_GRAM_BUCKETS = 64
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
+
+# the server's candidate kernels' outputs; StructTypes, not DDL strings,
+# which would cost a JVM parse round trip on every query
+_DOC_ID = T.StructField("doc_id", T.LongType())
+_CANDIDATES_SCHEMA = T.StructType([_DOC_ID])
+_NEEDLE_CANDIDATES_SCHEMA = T.StructType(
+    [T.StructField("needle_id", T.IntegerType()), _DOC_ID]
+)
 
 
 def trigrams_of(s: str) -> list[str]:
@@ -898,7 +907,7 @@ class TrigramServer(_UnitServer):
                 {"doc_id": np.concatenate(out) if out else _EMPTY_I64}
             )
 
-        return self._scan(grams).mapInPandas(kernel, "doc_id long")
+        return self._scan(grams).mapInPandas(kernel, _CANDIDATES_SCHEMA)
 
     def candidates_batch_df(
         self, needles: list[tuple[int, str]]
@@ -977,7 +986,7 @@ class TrigramServer(_UnitServer):
             )
 
         return self._scan(union_grams).mapInPandas(
-            kernel, "needle_id int, doc_id long"
+            kernel, _NEEDLE_CANDIDATES_SCHEMA
         )
 
     def grep_batch(

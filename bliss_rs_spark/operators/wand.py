@@ -33,11 +33,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bliss_rs_spark.config import IndexConfig
 from bliss_rs_spark.functions.placement import doc_shard
 from bliss_rs_spark.operators.bm25 import query_terms
 from bliss_rs_spark.operators.unit_server import _dead_sets_df, _id_sets_df, _UnitServer
+
+# the query kernel's output; a StructType, not a DDL string, which would
+# cost a JVM parse round trip on every query
+_TOPK_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
+)
 
 
 @functools.lru_cache(maxsize=64)
@@ -736,7 +743,13 @@ class WandServer(_UnitServer):
 
     Latency target (BENCH/BASELINE.md): <500ms warm top-10 on the 1M-doc
     store, vs ~3.3s through the batch path.  Rank-identical to wand_topk
-    (same kernel, same tie-breaks; tested).
+    (same kernel, same tie-breaks; tested).  Cost split on perfbench serve
+    (1000 docs, 4 shards, local[4], traced): one job of ~4 tasks, ~300 ms
+    executor run time per call (~75 ms per task, most of it the Python
+    worker waiting on the JVM; the kernel itself is a few ms) and ~110 ms
+    driver gap; p50 ~205 ms untraced.  Until session.keep_zip_directories
+    each task also re-read pyspark.zip's directory (~1.2 s run time per
+    call, p50 ~390 ms).
     """
 
     _null_key_rows = True
@@ -1005,7 +1018,7 @@ class WandServer(_UnitServer):
             yield pd.DataFrame(out)
 
         partials = self._scan(list(idfs)).mapInPandas(
-            kernel, "doc_id long, score double"
+            kernel, _TOPK_SCHEMA
         ).collect()
         merged = sorted(
             ((float(r["score"]), int(r["doc_id"])) for r in partials),

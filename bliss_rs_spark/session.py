@@ -13,6 +13,7 @@ import hashlib
 import os
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -64,6 +65,40 @@ def ship_package(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(zpath)
     spark._bliss_shipped = zpath
+
+
+def keep_zip_directories() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive's
+    directory only when the archive has changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and CPython 3.11's ``zipimporter.invalidate_caches`` re-reads the
+    whole central directory at once, for every importer instance: workers
+    import pyspark from ``pyspark.zip`` (~1.3k entries), so each task of
+    every Python stage paid ~170 ms before its kernel started.  The wrapper
+    keys each importer on its archive's ``(st_mtime_ns, st_size)`` at its
+    last read and re-reads when that key changes or ``stat`` fails; a new
+    archive path still gets a new importer.  Installed on package import,
+    so it reaches every worker that unpickles one of our kernels.
+    Idempotent.
+    """
+    read = zipimport.zipimporter.invalidate_caches
+    if getattr(read, "_keyed", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        if key is not None and key == getattr(self, "_dir_key", None):
+            return
+        read(self)
+        self._dir_key = key
+
+    invalidate_caches._keyed = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(

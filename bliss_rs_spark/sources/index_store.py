@@ -78,19 +78,22 @@ def _run_parallel(fns, max_workers: int = 4) -> list:
     of a segment/snapshot — each frame goes to its own directory, so the
     actions are fully independent; shared cached parents are computed once
     (block-manager locking).  ``inheritable_thread_target`` propagates the
-    JVM thread-locals (job group/description) per the PySpark docs."""
+    JVM thread-locals (job group/description) per the PySpark docs; given
+    the active session it carries the caller's job tags too (without one,
+    PySpark warns "Spark session is not provided" and drops them)."""
     if len(fns) == 1:
         return [fns[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        from pyspark import inheritable_thread_target as _itt
-    except ImportError:  # pragma: no cover - very old pyspark
-        def _itt(f):
-            return f
+    from pyspark import inheritable_thread_target as _itt
+
+    session = SparkSession.getActiveSession()
+    wrap = _itt(session) if session is not None else _itt
+    if wrap is session:  # pinned-thread mode off: no thread-locals to carry
+        wrap = _itt
 
     with ThreadPoolExecutor(max_workers=min(max_workers, len(fns))) as pool:
-        futs = [pool.submit(_itt(fn)) for fn in fns]
+        futs = [pool.submit(wrap(fn)) for fn in fns]
         return [f.result() for f in futs]
 
 
