@@ -58,15 +58,18 @@ def test_worker_keeps_zip_directory_across_tasks(spark):
         seen.append(cur)
         yield pd.DataFrame({"pid": [os.getpid()], "task": [len(seen)], "same": [same]})
 
-    rows = []
-    for _ in range(8):
-        rows += spark.range(1, numPartitions=1).mapInPandas(probe, _PROBE_SCHEMA).collect()
-    if all(r["same"] == -1 for r in rows):
-        pytest.skip("no zip archive on the workers' sys.path")
     # a worker's first task installs the wrapper after its caches were
     # invalidated, its second task keys each importer: from the third on,
-    # nothing is re-read
-    later = [r for r in rows if r["task"] >= 3]
+    # nothing is re-read.  Idle workers are handed out oldest first, so
+    # run jobs until one worker has had three tasks.
+    rows, later = [], []
+    for _ in range(64):
+        rows += spark.range(1, numPartitions=1).mapInPandas(probe, _PROBE_SCHEMA).collect()
+        if rows[-1]["same"] == -1:
+            pytest.skip("no zip archive on the workers' sys.path")
+        later = [r for r in rows if r["task"] >= 3]
+        if len(later) >= 2:
+            break
     assert later, rows
     assert all(r["same"] == 1 for r in later), rows
 
